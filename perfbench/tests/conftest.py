@@ -1,0 +1,16 @@
+from __future__ import annotations
+
+import sys
+from pathlib import Path
+
+import pytest
+
+HERE = Path(__file__).resolve().parent
+sys.path[:0] = [str(HERE.parent), str(HERE.parent.parent)]
+
+
+@pytest.fixture(scope="session")
+def spark():
+    from pysparkflow.session import get_spark
+
+    return get_spark(app_name="perfbench-tests", master="local[2]", shuffle_partitions=2)
