@@ -20,6 +20,7 @@ from typing import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pysparkflow.engine import partitioning
 from pysparkflow.graph.graph import FlowGraph
 
 
@@ -30,12 +31,6 @@ def bfs_distances(
 ) -> DataFrame:
     """Hop distances from the source set. Returns (vertex BIGINT,
     distance INT) for every reached vertex; distance(source)=1."""
-    from pysparkflow.engine.partitioning import (
-        sized_cache,
-        sized_partitions,
-        state_join_side,
-    )
-
     spark = graph.spark
     # the doubled arc view is cached once at the data-sized partition
     # count (one materialization; engine/partitioning.py — the partition
@@ -45,8 +40,7 @@ def bfs_distances(
     sym = graph.edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         graph.edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
-    arcs, n_arcs = sized_cache(sym, "src")
-    arc_parts = sized_partitions(n_arcs, sym)
+    arcs, n_arcs, arc_parts = partitioning.sized_cache(sym, "src")
     src_rows = [(int(x),) for x in dict.fromkeys(int(x) for x in sources)]
     # localCheckpoint per round: materializes AND truncates lineage so
     # planning cost stays flat across rounds (SURVEY.md §7.3)
@@ -72,13 +66,13 @@ def bfs_distances(
         # explicit hint the checkpointed frontier's unknown size
         # statistics force a sort-merge join that re-exchanges and
         # re-sorts the cached graph every round
-        fr = state_join_side(frontier, n_arcs, arc_parts, "vertex")
+        fr = partitioning.state_join_side(frontier, n_arcs, arc_parts, "vertex")
         nxt = (
             arcs.join(fr, arcs.src == fr.vertex)
             .select(F.col("dst").alias("vertex"))
             .distinct()
             .join(
-                state_join_side(seen_nearby, 2 * n_arcs, arc_parts, "vertex"),
+                partitioning.state_join_side(seen_nearby, 2 * n_arcs, arc_parts, "vertex"),
                 "vertex",
                 "left_anti",
             )

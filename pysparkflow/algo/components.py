@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pysparkflow.engine import partitioning
 from pysparkflow.graph.graph import FlowGraph
 
 
@@ -38,20 +39,13 @@ def connected_components(
     jobs; on small component graphs those two driver jobs are a
     measurable share of the whole resolution query, and partition sizing
     only needs the order of magnitude."""
-    from pysparkflow.engine.partitioning import sized_cache, sized_partitions
-
     # arc table cached once at the data-sized partition count
     # (engine/partitioning.py): the partition count is every iteration's
     # map-side task count; keyed by the hot join side (b == vertex)
     sym = graph.edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
         graph.edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
     )
-    if rows_hint is not None:
-        n_arcs = rows_hint
-        arcs = sym.repartition(sized_partitions(rows_hint, sym), "b").persist()
-    else:
-        arcs, n_arcs = sized_cache(sym, "b")
-    arc_parts = sized_partitions(n_arcs, sym)
+    arcs, n_arcs, arc_parts = partitioning.sized_cache(sym, "b", rows=rows_hint)
     labels = (
         arcs.groupBy("a")
         .agg(F.min("b").alias("nb_min"))
@@ -64,18 +58,16 @@ def connected_components(
         # dedicated job (r13 opt; plan truncation is identical)
         .localCheckpoint(eager=False)
     )
-    from pysparkflow.engine.partitioning import state_join_side
-
     for _ in range(max_iter):
         # labels rows <= |V| <= n_arcs: broadcast-gated state sides keep
         # the arc cache (and the vertex-sized left joins' stream sides)
         # free of per-round exchanges (engine/partitioning.py)
         neighbor_min = arcs.join(
-            state_join_side(labels, n_arcs, arc_parts, "vertex"),
+            partitioning.state_join_side(labels, n_arcs, arc_parts, "vertex"),
             arcs.b == labels.vertex,
         ).groupBy("a").agg(F.min("component").alias("nbr_min"))
         stepped = labels.join(
-            state_join_side(neighbor_min, n_arcs, arc_parts, "a"),
+            partitioning.state_join_side(neighbor_min, n_arcs, arc_parts, "a"),
             labels.vertex == neighbor_min.a,
             "left",
         ).select(
@@ -90,7 +82,7 @@ def connected_components(
         )
         doubled = (
             stepped.join(
-                state_join_side(lookup, n_arcs, arc_parts, "lv"),
+                partitioning.state_join_side(lookup, n_arcs, arc_parts, "lv"),
                 stepped.component == lookup.lv,
                 "left",
             )
@@ -112,7 +104,7 @@ def connected_components(
         changed = (
             doubled.alias("n")
             .join(
-                state_join_side(labels.alias("o"), n_arcs, arc_parts, "vertex"),
+                partitioning.state_join_side(labels.alias("o"), n_arcs, arc_parts, "vertex"),
                 "vertex",
             )
             .where(F.col("n.component") != F.col("o.component"))

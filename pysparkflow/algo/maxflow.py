@@ -11,8 +11,9 @@ bidirectional-path-growing (ff1..ff5, SURVEY.md §2.2) on DataFrames:
   graph, ff3/ReduceFF.java:82-163);
 * flow state is a small sparse table broadcast onto the edge cache each
   phase (the accepted-flows side file every task preloads, S6/D9,
-  ff1/FordFulkerson.java:44-63) with a size-gated fallback to a shuffle
-  join when flows outgrow broadcast range;
+  ff1/FordFulkerson.java:44-63) with engine/partitioning's row gate
+  falling back to a co-partitioned join when flows outgrow broadcast
+  range;
 * the bidirectional S/T excess growth (ff2/Vertex.java:70-92) becomes two
   BFS frontiers with per-vertex best-path retention (K-truncation D10,
   ff1/Vertex.java:118-131; K=1 uses a hash-aggregate min_by — partial
@@ -50,17 +51,17 @@ the driver loop instead gates explicit broadcasts on the frontier/visited
 counts it already tracks (the same schimmy discipline as the pagerank
 family), falling back to the shuffle join above the gate. Path-carrying
 sides (frontier, stored-path meet) gate on ESTIMATED BYTES — rows x
-(24 + 16*path-length bound) against engine/partitioning.
-STATE_BROADCAST_BYTES — because their rows are arrays, not scalars; the
-narrow visited column keeps the STATE_BROADCAST_ROWS row gate. Driver traffic per phase is
-the meet candidates (bounded by ``max_candidates``) and the accepted-flow
-deltas — both tiny. All randomness is hash-seeded (ff1/Vertex.java:60
+(24 + 16*path-length bound) through engine/partitioning.
+wide_rows_broadcastable — because their rows are arrays, not scalars; the
+narrow visited and flows sides take its row gate, state_join_side. Driver
+traffic per phase is the meet candidates (bounded by ``max_candidates``)
+and the accepted-flow deltas — both tiny. All randomness is hash-seeded (ff1/Vertex.java:60
 discipline), so task retries and speculative execution are safe.
 """
 
 from __future__ import annotations
 
-import sys
+import logging
 import time as _time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -71,6 +72,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from pysparkflow.engine import partitioning
 from pysparkflow.engine.acceptor import GreedyAcceptor
 from pysparkflow.engine.metrics import RoundMetrics
 from pysparkflow.graph.graph import FlowGraph
@@ -83,9 +85,11 @@ _FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
-# above this many flow-carrying edges, stop broadcasting the flows table
-# and fall back to a shuffle join (driver knows the exact count for free)
-_FLOW_BROADCAST_LIMIT = 2_000_000
+_log = logging.getLogger(__name__)
+
+# delta-set size above which repair switches from a broadcast map
+# literal (_repair_paths) to the distributed join (_repair_paths_join)
+REPAIR_JOIN_THRESHOLD = 20_000
 
 
 @dataclass
@@ -94,9 +98,7 @@ class MaxFlowConfig:
     (main.java:17-20, run:123-139)."""
 
     excess_list_max: int = 1  # K best paths kept per vertex/side (mf.excess.list.max, D10)
-    max_path_len: int | None = None  # mf.max.epath.length; binding cap => approx result
     max_candidates: int = 20_000  # driver-side collect bound per phase
-    max_phases: int | None = None  # safety valve; None = run to optimality
     # approximate early stop (the family's mf.approx=0.95 knob, run:138,
     # main.java:47-50 — the ff7/ff8 approx variants are absent from the
     # snapshot): stop once a phase's gain falls below (1-approx) x total,
@@ -106,17 +108,8 @@ class MaxFlowConfig:
     # candidates — meets from several depths conflict less on unit-capacity
     # edges, so phases accept bigger batches (fewer phases overall)
     meet_extra_rounds: int = 2
-    # incremental excess maintenance (the reference's D9 flow-update +
-    # saturation filter, ff1/Vertex.java:213-250): after accepting a batch,
-    # repair stored paths against the new flows and keep searching from
-    # them instead of restarting the BFS. False = restart every phase.
-    incremental: bool = True
-    # delta-set size above which repair switches from a broadcast map
-    # literal (_repair_paths) to the distributed join (_repair_paths_join)
-    repair_join_threshold: int = 20_000
     seed: int = 42
     validate: bool = False  # run flow-conservation/capacity invariant checks at end
-    verbose: bool = False
 
 
 @dataclass
@@ -222,16 +215,17 @@ def _repair_paths_join(df: DataFrame, delta_df: DataFrame) -> DataFrame:
 
 
 def _residual_arcs(
-    edges: DataFrame, flows: DataFrame | None, broadcast_flows: bool
+    edges: DataFrame, flows: DataFrame, n_flows: int, edge_partitions: int
 ) -> DataFrame:
     """Directed residual arcs from the canonical undirected edges + signed
     flows: residue(u->v) = cap - f, residue(v->u) = cap + f
-    (ff2/Edge.java:29-33). ``flows=None`` (zero flow) skips the join —
+    (ff2/Edge.java:29-33). ``n_flows`` bounds the flows table's rows for
+    the broadcast gate; ``n_flows == 0`` (zero flow) skips the join —
     rebuilding even an empty broadcast costs ~300ms per action."""
-    if flows is None:
+    if n_flows == 0:
         j = edges.withColumn("f", F.lit(0).cast("long"))
     else:
-        fl = F.broadcast(flows) if broadcast_flows else flows
+        fl = partitioning.state_join_side(flows, n_flows, edge_partitions, "u")
         j = edges.join(fl, ["u", "v"], "left").withColumn(
             "f", F.coalesce(F.col("f"), F.lit(0))
         )
@@ -252,10 +246,10 @@ def _extend(
     k: int,
     seed: int,
     rnd: int,
-    max_path_len: int | None,
-    n_frontier: int | None = None,
-    n_own: int | None = None,
-    frontier_row_bytes: int | None = None,
+    n_frontier: int,
+    n_own: int,
+    frontier_row_bytes: int,
+    arc_partitions: int,
 ) -> DataFrame:
     """One frontier extension round (D4 + D5 + D10).
 
@@ -267,29 +261,20 @@ def _extend(
     then per new vertex keep the K hash-random best (D10,
     ff1/Vertex.java:118-131 — deterministic seed per ff1 discipline).
 
-    ``n_frontier`` / ``n_own`` are caller-known row counts (the loop
-    counts every frontier anyway): small sides ship as explicit
+    ``n_frontier`` / ``n_own`` are caller-known row-count bounds (the
+    loop counts every frontier anyway): small sides ship as explicit
     broadcasts, so the static residual-arc cache is probed in place —
     checkpointed inputs carry no size statistics and Catalyst would
     otherwise exchange and sort the arc cache for BOTH joins every round
     (guide §2.4/§3.1). The frontier carries ``verts``/``ress`` path
     arrays, so its gate is BYTE-aware: ``frontier_row_bytes`` is the
     caller's static per-row byte bound and the broadcast only fires
-    under the 32 MB STATE_BROADCAST_BYTES budget (VERDICT r13 #1 — the
-    row gate alone would happily broadcast a hundreds-of-MB frontier at
-    cluster scale). The visited side is a single long column, so its
-    row gate's 16-B/row arithmetic holds as-is. Join results are
-    identical either way."""
-    from pysparkflow.engine.partitioning import (
-        STATE_BROADCAST_ROWS,
-        wide_rows_broadcastable,
-    )
-
-    if max_path_len is not None:
-        frontier = frontier.where(F.size("verts") <= max_path_len)
-    if n_frontier is not None and wide_rows_broadcastable(
-        n_frontier, frontier_row_bytes if frontier_row_bytes is not None else 16
-    ):
+    under engine/partitioning's 32 MB budget (VERDICT r13 #1 — the row
+    gate alone would happily broadcast a hundreds-of-MB frontier at
+    cluster scale). The visited side is a single long column, so it
+    takes the row gate, co-partitioning onto ``arc_partitions`` above
+    it. Join results are identical either way."""
+    if partitioning.wide_rows_broadcastable(n_frontier, frontier_row_bytes):
         frontier = F.broadcast(frontier)
     if forward:
         ext = frontier.join(arcs, frontier.vertex == arcs.src).select(
@@ -303,9 +288,9 @@ def _extend(
             F.concat(F.array(F.col("src")), F.col("verts")).alias("verts"),
             F.concat(F.array(F.col("res")), F.col("ress")).alias("ress"),
         )
-    visited = own_paths.select("vertex")
-    if n_own is not None and n_own <= STATE_BROADCAST_ROWS:
-        visited = F.broadcast(visited)
+    visited = partitioning.state_join_side(
+        own_paths.select("vertex"), n_own, arc_partitions, "vertex"
+    )
     ext = ext.join(visited, "vertex", "left_anti")
     pick = F.xxhash64("verts", F.lit(seed + rnd))
     if k == 1:
@@ -333,28 +318,20 @@ def max_flow(
     capacitated graph — the reference's headline query
     (max-flow(graph, sources[], sinks[]), main.java:17-20)."""
     cfg = config or MaxFlowConfig()
-    g, s_id, t_id = graph.with_super_nodes(sources, sinks)
+    g, s_id, t_id, n_edges = graph.with_super_nodes(sources, sinks)
     spark = g.spark
 
-    from pysparkflow.engine.partitioning import sized_partitions
-
     _t_init = _time.time()
-    # materialize once; the static graph is never shuffled again. The
-    # cached copy is repartitioned to the DATA size (engine/
-    # partitioning.py): its partition count is the map-side task count
-    # of every round's extension join — the session shuffle setting is
-    # tuned for relational scale, not a per-round frontier loop. A
-    # separate persisted copy also leaves any caller-held cache of
-    # g.edges intact when this one is released at the end.
-    # with_super_nodes' fused aggregate already counted the edges — skip
-    # the extra count job (guide §1.2: don't recompute what's known)
-    n_edges = (
-        g.edges_count_hint
-        if g.edges_count_hint is not None
-        else g.edges.count()
-    )
-    edges = g.edges.repartition(sized_partitions(n_edges, g.edges), "u").persist()
-    edges.count()
+    # cached once; the static graph is never shuffled again. The cached
+    # copy is repartitioned to the DATA size (engine/partitioning.py):
+    # its partition count is the map-side task count of every round's
+    # extension join — the session shuffle setting is tuned for
+    # relational scale, not a per-round frontier loop. A separate
+    # persisted copy also leaves any caller-held cache of g.edges intact
+    # when this one is released at the end. with_super_nodes' fused
+    # aggregate already counted the edges, so no job runs here: the
+    # first round materializes the cache.
+    edges, _, edge_parts = partitioning.sized_cache(g.edges, "u", rows=n_edges)
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     flows = _empty_flows(spark)
     flow_edge_count = 0
@@ -367,39 +344,34 @@ def max_flow(
     total = 0
     phase_cache: list[DataFrame] = []
 
-    # stored-path state carried across acceptance epochs (incremental mode):
+    # stored-path state carried across acceptance epochs:
     # consolidated, repaired, localCheckpointed path tables per side, plus
     # per-side row-count UPPER BOUNDS (repair only drops rows, so the
     # accumulated visited counts stay valid) — the broadcast gates below
     # need a bound, never an exact count (guide §3.1)
     stored: tuple[DataFrame, DataFrame, int, int] | None = None
-    from pysparkflow.engine.partitioning import wide_rows_broadcastable
 
     def _path_row_bytes() -> int:
         """Static per-row byte bound for path-carrying tables (frontier /
         stored paths): ``verts`` + ``ress`` are long arrays of at most
-        ``len_bound`` elements each (paths grow ONE vertex per extension
-        round, globally, and ``max_path_len`` caps the extension input
-        when set), 8 B per element x 2 arrays + 24 B of fixed row
-        overhead. Always an over-estimate, never an under-estimate —
-        the broadcast gates below must not OOM at cluster scale
-        (VERDICT r13 #1)."""
-        len_bound = metrics.rounds + 1
-        if cfg.max_path_len is not None:
-            len_bound = min(len_bound, cfg.max_path_len + 1)
-        return 24 + 16 * len_bound
+        ``metrics.rounds + 1`` elements each, 8 B per element x 2 arrays
+        + 24 B of fixed row overhead. Paths grow ONE vertex per
+        extension round, and stored paths survive the incremental
+        restart, so they keep growing ACROSS phases: the bound must be
+        the cumulative round count. A per-phase reset would
+        under-estimate row bytes and let the byte gate broadcast an
+        oversize frontier. Always an over-estimate, never an
+        under-estimate — the broadcast gates below must not OOM at
+        cluster scale (VERDICT r13 #1)."""
+        return 24 + 16 * (metrics.rounds + 1)
 
     _seg("init", _t_init)
-    while cfg.max_phases is None or metrics.phases < cfg.max_phases:
+    while True:
         metrics.phases += 1
         # cached per phase: the flows join + residual filter run once; every
         # round's joins scan the in-memory arc cache
         _t = _time.time()
-        arcs = _residual_arcs(
-            edges,
-            flows if flow_edge_count > 0 else None,
-            broadcast_flows=flow_edge_count <= _FLOW_BROADCAST_LIMIT,
-        ).persist()
+        arcs = _residual_arcs(edges, flows, flow_edge_count, edge_parts).persist()
         phase_cache.append(arcs)
         _seg("arcs_build", _t)
 
@@ -435,7 +407,7 @@ def max_flow(
                 F.col("verts").alias("o_verts"),
                 F.col("ress").alias("o_ress"),
             )
-            if wide_rows_broadcastable(v_t, _path_row_bytes()):
+            if partitioning.wide_rows_broadcastable(v_t, _path_row_bytes()):
                 o = F.broadcast(o)
             meets_df = (
                 paths_s.join(o, "vertex")
@@ -475,10 +447,10 @@ def max_flow(
                 cfg.excess_list_max,
                 cfg.seed,
                 rnd,
-                cfg.max_path_len,
                 n_frontier=n_s if extend_s else n_t,
                 n_own=v_s if extend_s else v_t,
                 frontier_row_bytes=_path_row_bytes(),
+                arc_partitions=edge_parts,
             ).localCheckpoint(eager=False)  # truncate lineage; the count below materializes
             other = paths_t if extend_s else paths_s
             o = other.select(
@@ -486,7 +458,9 @@ def max_flow(
                 F.col("verts").alias("o_verts"),
                 F.col("ress").alias("o_ress"),
             )
-            if wide_rows_broadcastable(v_t if extend_s else v_s, _path_row_bytes()):
+            if partitioning.wide_rows_broadcastable(
+                v_t if extend_s else v_s, _path_row_bytes()
+            ):
                 # the opposite side's path table is bounded by its visited
                 # count; its rows carry path arrays, so the gate is
                 # byte-aware — probe the fresh frontier in place for the meet
@@ -571,12 +545,13 @@ def max_flow(
         metrics.per_phase.append(
             {"phase": metrics.phases, "accepted": accepted_this_phase, "rounds": rnd}
         )
-        if cfg.verbose:
-            print(
-                f"[max_flow] phase={metrics.phases} rounds={rnd} "
-                f"accepted={accepted_this_phase} total={total}",
-                file=sys.stderr,
-            )
+        _log.debug(
+            "phase=%d rounds=%d accepted=%d total=%d",
+            metrics.phases,
+            rnd,
+            accepted_this_phase,
+            total,
+        )
 
         _t = _time.time()
         deltas = acceptor.flow_deltas()
@@ -594,40 +569,39 @@ def max_flow(
         _seg("flows_update", _t)
 
         _t = _time.time()
-        if cfg.incremental:
-            # D9: repair surviving paths against this epoch's deltas and
-            # carry them into the next epoch (consolidated + checkpointed
-            # BEFORE the arc cache they were built from is dropped)
-            delta_items = [(k, int(v)) for k, v in acceptor.delta.items() if v != 0]
-            if len(delta_items) <= cfg.repair_join_threshold:
-                rep_s = _repair_paths(paths_s, delta_items)
-                rep_t = _repair_paths(paths_t, delta_items)
-            else:
-                # too many deltas for a map literal — distributed join
-                # repair instead of abandoning the stored search state
-                repair_df = spark.createDataFrame(
-                    [(x, y, d) for (x, y), d in delta_items],
-                    schema="au long, av long, d long",
-                )
-                rep_s = _repair_paths_join(paths_s, repair_df)
-                rep_t = _repair_paths_join(paths_t, repair_df)
-            # ONE materialization job for both sides: tag + union +
-            # checkpoint, then split by tag over the cached partitions
-            # (coalesce bounds the union-accumulated partition count)
-            tagged = (
-                rep_s.withColumn("_side", F.lit("s"))
-                .unionAll(rep_t.withColumn("_side", F.lit("t")))
-                .coalesce(n_shuffle)
-                .localCheckpoint()
-            )
-            stored = (
-                tagged.where(F.col("_side") == "s").drop("_side"),
-                tagged.where(F.col("_side") == "t").drop("_side"),
-                v_s,
-                v_t,
-            )
+        # D9 incremental excess maintenance (the reference's flow-update +
+        # saturation filter, ff1/Vertex.java:213-250): repair surviving
+        # paths against this epoch's deltas and carry them into the next
+        # epoch instead of restarting the BFS (consolidated + checkpointed
+        # BEFORE the arc cache they were built from is dropped)
+        delta_items = [(k, int(v)) for k, v in acceptor.delta.items() if v != 0]
+        if len(delta_items) <= REPAIR_JOIN_THRESHOLD:
+            rep_s = _repair_paths(paths_s, delta_items)
+            rep_t = _repair_paths(paths_t, delta_items)
         else:
-            stored = None
+            # too many deltas for a map literal — distributed join
+            # repair instead of abandoning the stored search state
+            repair_df = spark.createDataFrame(
+                [(x, y, d) for (x, y), d in delta_items],
+                schema="au long, av long, d long",
+            )
+            rep_s = _repair_paths_join(paths_s, repair_df)
+            rep_t = _repair_paths_join(paths_t, repair_df)
+        # ONE materialization job for both sides: tag + union +
+        # checkpoint, then split by tag over the cached partitions
+        # (coalesce bounds the union-accumulated partition count)
+        tagged = (
+            rep_s.withColumn("_side", F.lit("s"))
+            .unionAll(rep_t.withColumn("_side", F.lit("t")))
+            .coalesce(n_shuffle)
+            .localCheckpoint()
+        )
+        stored = (
+            tagged.where(F.col("_side") == "s").drop("_side"),
+            tagged.where(F.col("_side") == "t").drop("_side"),
+            v_s,
+            v_t,
+        )
         _seg("repair", _t)
 
         for df in phase_cache:
@@ -651,7 +625,7 @@ def max_flow(
     phase_cache.clear()
     if cfg.validate:
         _t = _time.time()
-        _validate(edges, flows, s_id, t_id, total, n_flows=flow_edge_count)
+        _validate(edges, flows, s_id, t_id, total, flow_edge_count, edge_parts)
         _seg("validate", _t)
     edges.unpersist()
     return MaxFlowResult(value=total, flows=flows, s_id=s_id, t_id=t_id, metrics=metrics)
@@ -663,7 +637,8 @@ def _validate(
     s_id: int,
     t_id: int,
     total: int,
-    n_flows: int | None = None,
+    n_flows: int,
+    edge_partitions: int,
 ) -> None:
     """The reference's fail-fast runtime invariants (SURVEY.md §5.2 /
     FIXTURES.md §6): capacity bounds (ff1/Edge.java:66-71) and per-vertex
@@ -672,9 +647,7 @@ def _validate(
     flow_edge_count) gates an explicit broadcast of the checkpointed
     flows side — statless, it would otherwise SMJ-exchange the edge
     cache."""
-    fl = flows
-    if n_flows is not None and n_flows <= _FLOW_BROADCAST_LIMIT:
-        fl = F.broadcast(flows)
+    fl = partitioning.state_join_side(flows, n_flows, edge_partitions, "u")
     bad_cap_df = (
         fl.join(edges, ["u", "v"])
         .where(F.abs(F.col("f")) > F.col("cap"))

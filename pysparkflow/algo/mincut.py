@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pysparkflow.algo.maxflow import MaxFlowConfig, MaxFlowResult, _residual_arcs, max_flow
+from pysparkflow.engine import partitioning
 from pysparkflow.graph.graph import FlowGraph
 
 
@@ -50,30 +51,31 @@ def min_cut(
     value."""
     res = flow_result or max_flow(graph, sources, sinks, config=config)
     # rebuild the super-node graph deterministically (same ids as the run)
-    g2, s_id, t_id = graph.with_super_nodes(sources, sinks)
+    g2, s_id, t_id, n_edges = graph.with_super_nodes(sources, sinks)
     spark = g2.spark
 
-    from pysparkflow.engine.partitioning import sized_partitions, state_join_side
-
-    arcs = _residual_arcs(g2.edges, res.flows, broadcast_flows=True).persist()
-    # one count job materializes the cache (the first BFS round would
-    # have paid that anyway) and bounds the broadcast gate below
-    n_res = arcs.count()
-    arc_parts = sized_partitions(n_res, arcs)
+    # cached like max_flow's edge table, with the edge count
+    # with_super_nodes already computed; every edge yields at most two
+    # residual arcs (and at most two vertices), so 2 x n_edges bounds the
+    # arc, frontier and reach row counts for the broadcast gates below.
+    # The first BFS round materializes both caches.
+    edges, _, edge_parts = partitioning.sized_cache(g2.edges, "u", rows=n_edges)
+    n_res = 2 * n_edges
+    arcs = _residual_arcs(edges, res.flows, n_edges, edge_parts).persist()
     # directed BFS over residual arcs: frontier-only shuffles, the arc
     # table is scanned from cache each round (schimmy); the frontier and
     # reach sides are broadcast-gated (state_join_side) so the cached
     # residual arcs are never re-exchanged or re-sorted per round
-    reach = spark.createDataFrame([(int(s_id),)], "vertex long").persist()
+    reach = spark.createDataFrame([(int(s_id),)], "vertex long")
     frontier = reach
     while True:
-        fr = state_join_side(frontier, n_res, arc_parts, "vertex")
+        fr = partitioning.state_join_side(frontier, n_res, edge_parts, "vertex")
         nxt = (
             arcs.join(fr, fr.vertex == arcs.src)
             .select(F.col("dst").alias("vertex"))
             .distinct()
             .join(
-                state_join_side(reach, n_res, arc_parts, "vertex"),
+                partitioning.state_join_side(reach, n_res, edge_parts, "vertex"),
                 "vertex",
                 "left_anti",
             )
@@ -85,12 +87,14 @@ def min_cut(
         frontier = nxt
     arcs.unpersist(blocking=False)
 
+    # the returned lazy cut_edges plan still scans the tracked edge cache:
+    # release it with engine.cache.release_tracked once consumed
     s_side = reach
     in_s = reach.select(F.col("vertex").alias("u")).withColumn("_su", F.lit(1))
     in_s_v = reach.select(F.col("vertex").alias("v")).withColumn("_sv", F.lit(1))
     classified = (
-        g2.edges.join(F.broadcast(in_s), "u", "left")
-        .join(F.broadcast(in_s_v), "v", "left")
+        edges.join(partitioning.state_join_side(in_s, n_res, edge_parts, "u"), "u", "left")
+        .join(partitioning.state_join_side(in_s_v, n_res, edge_parts, "v"), "v", "left")
         .withColumn("_su", F.coalesce("_su", F.lit(0)))
         .withColumn("_sv", F.coalesce("_sv", F.lit(0)))
     )

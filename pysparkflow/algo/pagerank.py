@@ -25,8 +25,109 @@ iteration count (the reference's file-per-round, D11).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pysparkflow.engine import partitioning
+from pysparkflow.engine.cache import track
+
+
+def _outdegree_arcs(
+    edges: DataFrame, src: str, dst: str, validate: bool, who: str
+) -> tuple[DataFrame, DataFrame, DataFrame, int, int]:
+    """(e, arcs, verts, n_edges, arc_parts) shared by both rankers. The
+    edge plan is cached ONCE at the data-sized partition count (see
+    engine/partitioning.py; the arc table's partition count is every
+    round's map-side task count, measured 2x at local sf0.1) — the
+    outdegree agg and the arc join both read the cache, and since e is
+    hash-partitioned on u, neither needs a further exchange. ``arcs``
+    (edges with outdegree attached) and ``verts`` are tracked caches:
+    the returned lazy ranks plan still scans them, so the caller
+    releases them via engine/cache.release_tracked after consuming.
+
+    ``validate`` checks the outdegree >= 1 precondition: a sink vertex
+    would otherwise be silently dropped with its rank mass leaking."""
+    e, n_edges, arc_parts = partitioning.sized_cache(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), "u"
+    )
+    deg = e.groupBy("u").agg(F.count("*").alias("outdeg"))
+    # the degree side (<= n_edges rows) is broadcast-gated: the aggregate
+    # output otherwise re-exchanges and Catalyst sort-merge-joins it
+    # against the edge cache — one avoidable |E|-sort per query at build
+    arcs = track(
+        e.join(partitioning.state_join_side(deg, n_edges, arc_parts, "u"), "u")
+    )
+    verts = track(arcs.select(F.col("u").alias("vertex")).distinct())
+    if validate:
+        n_sinks = (
+            e.select(F.col("v").alias("vertex"))
+            .distinct()
+            .join(verts, "vertex", "left_anti")
+            .count()
+        )
+        if n_sinks:
+            raise ValueError(
+                f"{who} requires outdegree >= 1 for every vertex; "
+                f"{n_sinks} vertices appear only as destinations "
+                f"(symmetrize the graph or add self-loops)"
+            )
+    return e, arcs, verts, n_edges, arc_parts
+
+
+def _rank_rounds(
+    arcs: DataFrame,
+    verts: DataFrame,
+    ranks: DataFrame,
+    restart: Column,
+    damping: float,
+    iterations: int,
+    upper_rows: int,
+    arc_parts: int,
+    checkpoint_every: int,
+    indegree_complete: bool,
+) -> DataFrame:
+    """The power-iteration rounds both rankers share; they differ only in
+    the ``restart`` term and the gate bound ``upper_rows`` on |V|."""
+    for i in range(iterations):
+        # state_join_side: broadcast the |V|-row rank table (or
+        # co-partition it above the gate) so the cached arcs are never
+        # exchanged or sorted per round — the schimmy promise made
+        # physical (engine/partitioning.py)
+        contrib = (
+            arcs.join(
+                partitioning.state_join_side(
+                    ranks.withColumnRenamed("vertex", "u"),
+                    upper_rows,
+                    arc_parts,
+                    "u",
+                ),
+                "u",
+            )
+            .groupBy(F.col("v").alias("vertex"))
+            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("mass"))
+        )
+        if indegree_complete:
+            # the aggregate's key set is already all of verts
+            ranks = contrib.select(
+                "vertex",
+                (restart + F.lit(damping) * F.col("mass")).alias("rank"),
+            )
+        else:
+            # vertices with no inbound arcs keep only the restart term
+            ranks = verts.join(contrib, "vertex", "left").select(
+                "vertex",
+                (
+                    restart + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
+                ).alias("rank"),
+            )
+        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
+            # lazy: plan truncation is immediate; the CALLER's first full
+            # action materializes the chain of lazy checkpoints (rounds
+            # run no per-round action here — a partial action like
+            # take/limit recomputes unmaterialized partitions until a
+            # full pass runs). No dedicated cut job (r13 opt, ADVICE r13)
+            ranks = ranks.localCheckpoint(eager=False)
+    return ranks
 
 
 def pagerank(
@@ -58,84 +159,24 @@ def pagerank(
     the iterative scheduler floor). Semantics are unchanged where the
     precondition holds; leave False for general directed inputs.
     Returns (vertex, rank)."""
-    from pysparkflow.engine.partitioning import (
-        sized_cache,
-        sized_partitions,
-        state_join_side,
+    e, arcs, verts, _, arc_parts = _outdegree_arcs(
+        edges, src, dst, validate, "pagerank"
     )
-
-    # edge plan cached ONCE at the data-sized partition count (see
-    # engine/partitioning.py; the arc table's partition count is every
-    # round's map-side task count, measured 2x at local sf0.1) — the
-    # outdegree agg and the arc join both read the cache, and since e is
-    # hash-partitioned on u, neither needs a further exchange
-    e, n_edges = sized_cache(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), "u"
-    )
-    arc_parts = sized_partitions(n_edges, edges)
-    deg = e.groupBy("u").agg(F.count("*").alias("outdeg"))
-    # static side: edges with outdegree attached, cached once (schimmy).
-    # The degree side (<= n_edges rows) is broadcast-gated: the aggregate
-    # output otherwise re-exchanges and Catalyst sort-merge-joins it
-    # against the edge cache — one avoidable |E|-sort per query at build
-    arcs = e.join(state_join_side(deg, n_edges, arc_parts, "u"), "u").persist()
-    verts = arcs.select(F.col("u").alias("vertex")).distinct().persist()
     n = verts.count()  # materializes arcs/verts from e's cache
     e.unpersist()  # rounds scan arcs; the raw edge cache is done
-    if validate:
-        n_sinks = (
-            e.select(F.col("v").alias("vertex"))
-            .distinct()
-            .join(verts, "vertex", "left_anti")
-            .count()
-        )
-        if n_sinks:
-            arcs.unpersist()
-            verts.unpersist()
-            raise ValueError(
-                f"pagerank requires outdegree >= 1 for every vertex; "
-                f"{n_sinks} vertices appear only as destinations "
-                f"(symmetrize the graph or add self-loops)"
-            )
     ranks = verts.select("vertex", (F.lit(1.0) / n).alias("rank"))
-    base = (1.0 - damping) / n
-    for i in range(iterations):
-        # state_join_side: broadcast the |V|-row rank table (or
-        # co-partition it above the gate) so the cached arcs are never
-        # exchanged or sorted per round — the schimmy promise made
-        # physical (engine/partitioning.py)
-        contrib = (
-            arcs.join(
-                state_join_side(
-                    ranks.withColumnRenamed("vertex", "u"), n, arc_parts, "u"
-                ),
-                "u",
-            )
-            .groupBy(F.col("v").alias("vertex"))
-            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("mass"))
-        )
-        if indegree_complete:
-            # the aggregate's key set is already all of verts
-            ranks = contrib.select(
-                "vertex",
-                (F.lit(base) + F.lit(damping) * F.col("mass")).alias("rank"),
-            )
-        else:
-            # vertices with no inbound arcs keep the rank floor (1-d)/N
-            ranks = verts.join(contrib, "vertex", "left").select(
-                "vertex",
-                (
-                    F.lit(base) + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
-                ).alias("rank"),
-            )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            # lazy: plan truncation is immediate; the CALLER's first full
-            # action materializes the chain of lazy checkpoints (rounds
-            # run no per-round action here — a partial action like
-            # take/limit recomputes unmaterialized partitions until a
-            # full pass runs). No dedicated cut job (r13 opt, ADVICE r13)
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+    return _rank_rounds(
+        arcs,
+        verts,
+        ranks,
+        F.lit((1.0 - damping) / n),
+        damping,
+        iterations,
+        n,
+        arc_parts,
+        checkpoint_every,
+        indegree_complete,
+    )
 
 
 def personalized_pagerank(
@@ -162,44 +203,13 @@ def personalized_pagerank(
     ``indegree_complete=True``: same identity-join elision as
     ``pagerank`` for symmetrized graphs (see there).
     Returns (vertex, rank)."""
-    from pysparkflow.engine.cache import track
-
     if not sources:
         raise ValueError("personalized_pagerank needs a non-empty source set")
-    from pysparkflow.engine.partitioning import (
-        sized_cache,
-        sized_partitions,
-        state_join_side,
+    _, arcs, verts, n_edges, arc_parts = _outdegree_arcs(
+        edges, src, dst, validate, "personalized_pagerank"
     )
-
-    # edge plan cached once at the data-sized partition count (see
-    # pagerank above); tracked so the caller's release_tracked frees it
-    # — the returned lazy ranks plan still scans arcs, which scans e
-    e, n_edges = sized_cache(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), "u"
-    )
-    arc_parts = sized_partitions(n_edges, edges)
-    track(e)  # register the persisted copy for the caller's release
-    deg = e.groupBy("u").agg(F.count("*").alias("outdeg"))
-    # tracked persists: the returned lazy ranks plan still scans these;
-    # callers release via engine/cache.release_tracked after consuming.
-    # deg broadcast-gated as in pagerank (one fewer |E| sort at build)
-    arcs = track(e.join(state_join_side(deg, n_edges, arc_parts, "u"), "u"))
-    verts = track(arcs.select(F.col("u").alias("vertex")).distinct())
     seeds = [int(s) for s in sources]
     if validate:
-        n_sinks = (
-            e.select(F.col("v").alias("vertex"))
-            .distinct()
-            .join(verts, "vertex", "left_anti")
-            .count()
-        )
-        if n_sinks:
-            raise ValueError(
-                f"personalized_pagerank requires outdegree >= 1 for every "
-                f"vertex; {n_sinks} vertices appear only as destinations "
-                f"(symmetrize the graph or add self-loops)"
-            )
         n_seeds = verts.where(F.col("vertex").isin(seeds)).count()
         if n_seeds != len(set(seeds)):
             raise ValueError(
@@ -207,44 +217,21 @@ def personalized_pagerank(
                 f"are not vertices of the graph — their restart mass "
                 f"would silently disappear"
             )
-    base = F.when(
+    restart = F.when(
         F.col("vertex").isin(seeds), F.lit((1.0 - damping) / len(seeds))
     ).otherwise(F.lit(0.0))
     # start from the restart vector itself (the t=0 walk distribution)
-    ranks = verts.select("vertex", base.alias("rank"))
-    for i in range(iterations):
-        # |V| <= n_edges (every vertex has outdegree >= 1): a safe bound
-        # for the broadcast gate (see pagerank above)
-        contrib = (
-            arcs.join(
-                state_join_side(
-                    ranks.withColumnRenamed("vertex", "u"),
-                    n_edges,
-                    arc_parts,
-                    "u",
-                ),
-                "u",
-            )
-            .groupBy(F.col("v").alias("vertex"))
-            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("mass"))
-        )
-        if indegree_complete:
-            ranks = contrib.select(
-                "vertex",
-                (base + F.lit(damping) * F.col("mass")).alias("rank"),
-            )
-        else:
-            ranks = verts.join(contrib, "vertex", "left").select(
-                "vertex",
-                (
-                    base + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
-                ).alias("rank"),
-            )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            # lazy: plan truncation is immediate; the CALLER's first full
-            # action materializes the chain of lazy checkpoints (rounds
-            # run no per-round action here — a partial action like
-            # take/limit recomputes unmaterialized partitions until a
-            # full pass runs). No dedicated cut job (r13 opt, ADVICE r13)
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+    ranks = verts.select("vertex", restart.alias("rank"))
+    # |V| <= n_edges (every vertex has outdegree >= 1): a safe gate bound
+    return _rank_rounds(
+        arcs,
+        verts,
+        ranks,
+        restart,
+        damping,
+        iterations,
+        n_edges,
+        arc_parts,
+        checkpoint_every,
+        indegree_complete,
+    )

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pysparkflow.engine import partitioning
+
 
 def bounded_sssp(
     edges: DataFrame,
@@ -51,24 +53,20 @@ def bounded_sssp(
     at once. Deep bounds (hypercube-diameter runs, tools/iter_scale.py)
     exhausted the driver at cadence 8 — 4 keeps plan depth and
     broadcast lifetime bounded and leaves short runs (max_hops <= 4,
-    the registry entry) checkpoint-free."""
-    from pysparkflow.engine.partitioning import (
-        sized_cache,
-        sized_partitions,
-        state_join_side,
-    )
+    the registry entry) checkpoint-free.
 
+    The returned lazy plan still scans the cached arc table: release it
+    with ``engine.cache.release_tracked`` once the result is consumed."""
     # arc table cached once at the data-sized partition count
     # (engine/partitioning.py): the partition count is every round's
     # map-side task count; sized_cache avoids computing the edge plan
     # twice for count + cache
-    arcs, n_arcs = sized_cache(
+    arcs, n_arcs, arc_parts = partitioning.sized_cache(
         edges.select(
             F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
         ),
         "u",
     )
-    arc_parts = sized_partitions(n_arcs, edges)
     spark = edges.sparkSession
     dist = spark.createDataFrame(
         [(int(s), 0.0) for s in sources], "vertex long, dist double"
@@ -82,7 +80,7 @@ def bounded_sssp(
         # co-partitions) the dist side so the arc cache never reshuffles
         # (engine/partitioning.py)
         cand = arcs.join(
-            state_join_side(
+            partitioning.state_join_side(
                 dist.withColumnRenamed("vertex", "u"), n_arcs, arc_parts, "u"
             ),
             "u",

@@ -1,14 +1,28 @@
-"""Data-sized partition counts for iterative dataflows.
+"""Sizing, broadcast gating and release of iterative graph loops' state.
 
-The iterative graph family (pagerank, PPR, label propagation, bounded
-SSSP) re-scans a static cached arc table every round. The arc table's
-partition count sets the MAP-side task count of every round's stages,
-and the session ``spark.sql.shuffle.partitions`` is tuned for the
-session's big relational shuffles — at local sf0.1 that is 32 partitions
-of ~40k arcs each, where per-task scheduling overhead dominates the
-10-round loop (measured 2x: 10 rounds over 1.18M arcs run ~7-9s at 32
-partitions, ~3.4-5s at 8). AQE's reduce-side coalescing cannot fix this:
-it never touches the map-side task count of a cached table's scan.
+All nine iterative loops — bfs, connected components, pagerank,
+personalized pagerank, bounded SSSP, label propagation, k-core,
+max-flow and min-cut — follow one physical policy (the ff3 "schimmy"
+lesson): cache the static arc table once, then move only vertex state
+each round. This module is the one place that policy lives:
+
+* ``sized_cache`` caches the arc table at a data-sized partition count
+  and registers it with ``engine.cache.track``, so ``release_tracked``
+  frees it even when the loop's lazy result still reads it;
+* ``state_join_side`` (narrow per-vertex rows) and
+  ``wide_rows_broadcastable`` (rows carrying path arrays) decide whether
+  a per-round join side ships as a broadcast or co-partitions with the
+  cache. Callers look both up through this module at call time, so a
+  wrapper installed on it (perfbench's traced run) sees every decision.
+
+The arc table's partition count sets the MAP-side task count of every
+round's stages, and the session ``spark.sql.shuffle.partitions`` is
+tuned for the session's big relational shuffles — at local sf0.1 that is
+32 partitions of ~40k arcs each, where per-task scheduling overhead
+dominates the 10-round loop (measured 2x: 10 rounds over 1.18M arcs run
+~7-9s at 32 partitions, ~3.4-5s at 8). AQE's reduce-side coalescing
+cannot fix this: it never touches the map-side task count of a cached
+table's scan.
 
 ``sized_partitions`` clamps rows/``rows_per_partition`` to
 [1, session shuffle partitions]: small inputs get few, fat partitions
@@ -24,6 +38,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pysparkflow.engine.cache import track
+
 ROWS_PER_PARTITION = 150_000
 
 # Per-round vertex-state join sides (ranks, dists, labels) up to this
@@ -32,9 +48,8 @@ ROWS_PER_PARTITION = 150_000
 # Above it, the state is co-partitioned onto the arc cache's partition
 # count instead, which still never reshuffles the arcs (the state side
 # pays its one exchange; a billion-vertex cluster run keeps state
-# distributed). Same size-gated discipline as maxflow's
-# _FLOW_BROADCAST_LIMIT. 2M rows of (long, double/long) is ~32 MB
-# broadcast — comfortable for driver and executors at any sane config.
+# distributed). 2M rows of (long, double/long) is ~32 MB broadcast —
+# comfortable for driver and executors at any sane config.
 STATE_BROADCAST_ROWS = 2_000_000
 
 # Byte budget matching the row gate's own arithmetic (2M rows x ~16 B =
@@ -48,12 +63,12 @@ STATE_BROADCAST_BYTES = 32 * 2**20
 def wide_rows_broadcastable(rows: int, row_bytes: int) -> bool:
     """Broadcast gate for join sides whose rows carry variable-width
     payloads: ``rows`` is a caller-known row-count upper bound and
-    ``row_bytes`` a static per-row byte bound (e.g. 24 + 16*max_path_len
-    for a maxflow frontier carrying two long arrays). True only when the
+    ``row_bytes`` a static per-row byte bound (e.g. 24 + 16 x path-length
+    bound for a maxflow frontier carrying two long arrays). True only when the
     estimated relation fits the same 32 MB budget the narrow-row
     STATE_BROADCAST_ROWS gate encodes; callers fall back to the shuffle
-    join above it. Strictly tighter than the row gate for any
-    ``row_bytes`` >= 16."""
+    join above it. Tighter than the row gate for any ``row_bytes`` above
+    16."""
     return rows * row_bytes <= STATE_BROADCAST_BYTES
 
 # streaming state stores are created per shuffle partition (a
@@ -179,24 +194,28 @@ def sized_partitions(
 
 
 def sized_cache(
-    df: DataFrame,
-    *key_cols: str,
-    rows_per_partition: int = ROWS_PER_PARTITION,
-) -> tuple[DataFrame, int]:
-    """(cached right-sized copy, row count) of ``df`` without computing
-    its plan twice: cache the raw plan, count it (one compute), build
-    the repartitioned copy FROM the cache, materialize it, release the
-    raw cache. The naive count-then-repartition-then-persist order
-    recomputes the source plan (often a distinct/symmetrize shuffle)
-    once per step. The caller owns the returned cache's release."""
+    df: DataFrame, *key_cols: str, rows: int | None = None
+) -> tuple[DataFrame, int, int]:
+    """(cache, rows, partitions) for a loop's static arc table: ``df``
+    hash-partitioned on ``key_cols`` to ``sized_partitions(rows)``,
+    persisted and registered with ``engine.cache.track`` — loops whose
+    lazy result still reads the cache rely on ``release_tracked``; the
+    others unpersist it on return.
+
+    ``rows=None`` counts ``df`` without computing its plan twice: cache
+    the raw plan, count it (one compute), build the repartitioned copy
+    FROM that cache, materialize it, release the raw cache (the naive
+    count-then-repartition-then-persist order recomputes the source
+    plan, often a distinct/symmetrize shuffle, once per step). A caller
+    that already knows the row count, or a bound on it, passes ``rows``:
+    no job runs and the first round's action materializes the cache."""
+    if rows is not None:
+        parts = sized_partitions(rows, df)
+        return track(df.repartition(parts, *key_cols)), rows, parts
     base = df.persist()
-    n = base.count()
-    out = (
-        base.repartition(sized_partitions(n, df, rows_per_partition), *key_cols)
-        if key_cols
-        else base.repartition(sized_partitions(n, df, rows_per_partition))
-    )
-    out = out.persist()
+    rows = base.count()
+    parts = sized_partitions(rows, df)
+    out = track(base.repartition(parts, *key_cols))
     out.count()  # materialize from the cached base (cheap columnar read)
     base.unpersist()
-    return out, n
+    return out, rows, parts

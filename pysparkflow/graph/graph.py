@@ -98,10 +98,6 @@ class FlowGraph:
 
     spark: SparkSession
     edges: DataFrame  # (u BIGINT, v BIGINT, cap BIGINT)
-    # exact row count of ``edges`` when a builder already computed it
-    # (with_super_nodes' fused aggregate) — lets max_flow skip its own
-    # count job. None = unknown; consumers must count.
-    edges_count_hint: int | None = None
 
     @classmethod
     def from_edge_pairs(
@@ -121,7 +117,7 @@ class FlowGraph:
 
     def with_super_nodes(
         self, sources: Iterable[int], sinks: Iterable[int]
-    ) -> tuple["FlowGraph", int, int]:
+    ) -> tuple["FlowGraph", int, int, int]:
         """Super-source/sink injection (D3): reduce multi-source/multi-sink
         max-flow to single s-t by adding a super-source with INF edges to all
         sources and a super-sink with INF edges to all sinks
@@ -129,7 +125,10 @@ class FlowGraph:
 
         The reference reserves ids 1 and 2 (ff1/Vertex.java:12-13); real-world
         tables may use any ids, so we derive collision-free ids from the graph's
-        id range (one tiny agg action). Returns (graph, s_id, t_id).
+        id range (one tiny agg action). Returns (graph, s_id, t_id,
+        n_edges), where ``n_edges`` is the new graph's exact edge count —
+        max_flow and min_cut size and gate their caches with it instead of
+        running a count job.
         """
         sources = [int(x) for x in sources]
         sinks = [int(x) for x in sinks]
@@ -143,7 +142,7 @@ class FlowGraph:
         # ONE fused aggregation job computes the id high-water mark, every
         # terminal's incident sum (conditional sums — a terminal is
         # incident as u, as v, or never both per row since u < v), and
-        # the edge count (the count_hint max_flow consumes) — this was
+        # the edge count (returned for max_flow / min_cut) — this was
         # two sequential collect jobs before (guide §1.2: fewer passes).
         terms = sorted(set(sources) | set(sinks))
         aggs = [
@@ -173,13 +172,10 @@ class FlowGraph:
         ]
         super_df = spark.createDataFrame(super_rows, schema="u long, v long, cap long")
         return (
-            FlowGraph(
-                spark,
-                self.edges.unionAll(super_df),
-                edges_count_hint=n_base + len(super_rows),
-            ),
+            FlowGraph(spark, self.edges.unionAll(super_df)),
             s_id,
             t_id,
+            n_base + len(super_rows),
         )
 
     def degrees(self) -> DataFrame:

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pysparkflow.engine import partitioning
 from pysparkflow.graph.triangles import canonical_edges
 
 
@@ -45,20 +46,15 @@ def kcore_vertices(
     Lineage truncates every round (see the loop comment — a peel
     round's plan references the edge table three times, so anything
     less than per-round truncation grows the plan tree 3^rounds)."""
-    from pysparkflow.engine.partitioning import (
-        sized_cache,
-        sized_partitions,
-        state_join_side,
-    )
-
     # edge table cached once at the data-sized partition count
     # (engine/partitioning.py): the partition count is every peel
     # round's map-side task count; sized_cache avoids computing the
     # canonicalize shuffle twice for count + cache. The returned count
     # is carried across rounds: this round's n_before IS last round's
     # n_after, so no per-round recount.
-    e, n_before = sized_cache(canonical_edges(edges, src, dst), "a")
-    arc_parts = sized_partitions(n_before, e)
+    e, n_before, arc_parts = partitioning.sized_cache(
+        canonical_edges(edges, src, dst), "a"
+    )
     rounds = 0
     while True:
         deg = (
@@ -75,10 +71,10 @@ def kcore_vertices(
         # semi-joins plan sort-merge — re-exchanging and re-sorting the
         # (checkpointed) edge table twice per peel round
         # (engine/partitioning.py state_join_side, guide §2.4/§3.1).
-        ka = state_join_side(
+        ka = partitioning.state_join_side(
             keep.select(F.col("v").alias("a")), 2 * n_before, arc_parts, "a"
         )
-        kb = state_join_side(
+        kb = partitioning.state_join_side(
             keep.select(F.col("v").alias("b")), 2 * n_before, arc_parts, "b"
         )
         # localCheckpoint EVERY round, not persist + an occasional cut:

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pysparkflow.engine.cache import track
+from pysparkflow.engine import partitioning
 
 
 def label_propagation(
@@ -56,23 +56,15 @@ def label_propagation(
     aggregate already covers every vertex, so the join is an identity
     costing one extra stage per round (VERDICT r5 #5).
     Returns (vertex, label)."""
-    from pysparkflow.engine.partitioning import (
-        sized_cache,
-        sized_partitions,
-        state_join_side,
-    )
-
-    # tracked persist: the returned lazy labels plan still scans arcs, so
+    # tracked cache: the returned lazy labels plan still scans arcs, so
     # release is the caller's (engine/cache.release_tracked) after
     # consume. Cached ONCE at the data-sized partition count
     # (engine/partitioning.py — the partition count is every round's
     # map-side task count; sized_cache avoids computing the edge plan
     # twice for count + cache).
-    arcs, n_arcs = sized_cache(
+    arcs, n_arcs, arc_parts = partitioning.sized_cache(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), "u"
     )
-    arc_parts = sized_partitions(n_arcs, edges)
-    arcs = track(arcs)
     verts = arcs.select(F.col("u").alias("vertex")).distinct()
     if validate:
         n_dst_only = (
@@ -93,7 +85,7 @@ def label_propagation(
         # arc cache is never exchanged/sorted per round
         # (engine/partitioning.py state_join_side)
         msgs = arcs.join(
-            state_join_side(
+            partitioning.state_join_side(
                 labels.withColumnRenamed("vertex", "u"), n_arcs, arc_parts, "u"
             ),
             "u",
@@ -116,7 +108,7 @@ def label_propagation(
             # winner table (<= |V| <= n_arcs rows) is broadcast-gated so
             # the checkpointed (statless) labels side is probed in place
             labels = labels.join(
-                state_join_side(new, n_arcs, arc_parts, "vertex"),
+                partitioning.state_join_side(new, n_arcs, arc_parts, "vertex"),
                 "vertex",
                 "left",
             ).select("vertex", F.coalesce("_new", "label").alias("label"))

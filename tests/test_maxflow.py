@@ -180,9 +180,12 @@ def test_repair_join_equals_map(spark):
     assert (5, (1, 3, 5), (2, 0)) not in b   # saturated path dropped
 
 
-def test_join_repair_end_to_end(spark):
+def test_join_repair_end_to_end(spark, monkeypatch):
     # force every epoch through the distributed join repair and confirm
     # the exact optimum is still reached (unit-cap grid, multi-phase)
+    from pysparkflow.algo import maxflow
+
+    monkeypatch.setattr(maxflow, "REPAIR_JOIN_THRESHOLD", 0)
     edges = []
     for r in range(5):
         for c in range(5):
@@ -191,8 +194,7 @@ def test_join_repair_end_to_end(spark):
                 edges.append((v, v + 1, 1))
             if r < 4:
                 edges.append((v, v + 5, 1))
-    _check(spark, edges, [100], [124], repair_join_threshold=0,
-           excess_list_max=4)
+    _check(spark, edges, [100], [124], excess_list_max=4)
 
 
 def test_graded_lineitem_value_vs_networkx(spark):
@@ -254,30 +256,25 @@ def test_extend_probes_arc_cache_without_sort_merge(spark):
 
     edges = [(10, 11, 3), (11, 12, 2), (12, 13, 5), (11, 13, 4)]
     g = _build(spark, edges)
-    arcs = _residual_arcs(g.edges.persist(), None, True).persist()
+    arcs = _residual_arcs(g.edges.persist(), None, 0, 1).persist()
     seed = spark.createDataFrame(
         [(10, [10], [])], "vertex long, verts array<long>, ress array<long>"
     )
-    f1 = _extend(seed, arcs, seed, True, 1, 42, 1, None, n_frontier=1, n_own=1).localCheckpoint()
-    out = _extend(f1, arcs, f1, True, 1, 42, 2, None, n_frontier=2, n_own=3)
+    gate = dict(frontier_row_bytes=56, arc_partitions=1)
+    f1 = _extend(seed, arcs, seed, True, 1, 42, 1, n_frontier=1, n_own=1, **gate).localCheckpoint()
+    out = _extend(f1, arcs, f1, True, 1, 42, 2, n_frontier=2, n_own=3, **gate)
     plan = out._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
     assert "SortMergeJoin" not in plan, plan[:2000]
     assert plan.count("BroadcastHashJoin") >= 2, plan[:2000]
-    # ungated (counts unknown) keeps the legacy shuffle-join fallback
-    fallback = _extend(f1, arcs, f1, True, 1, 42, 2, None)
-    fplan = fallback._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "SortMergeJoin" in fplan
 
 
 def test_wide_frontier_gate_is_byte_aware(spark):
     """A path-carrying frontier must NOT broadcast when rows x row-bytes
     exceeds the 32 MB STATE_BROADCAST_BYTES budget, even when the row
     count alone sits far under STATE_BROADCAST_ROWS (VERDICT r13 #1: at
-    max_path_len ~30 a 1.9M-row frontier is hundreds of MB — an OOM the
+    path length ~30 a 1.9M-row frontier is hundreds of MB — an OOM the
     row gate would happily broadcast). The narrow visited side keeps its
     row gate."""
     from pysparkflow.algo.maxflow import _extend, _residual_arcs
@@ -287,7 +284,7 @@ def test_wide_frontier_gate_is_byte_aware(spark):
         wide_rows_broadcastable,
     )
 
-    # the helper's arithmetic: at 520 B/row (max_path_len=31 bound),
+    # the helper's arithmetic: at 520 B/row (path-length bound 31),
     # the fallback fires at ~64.5k rows — three orders of magnitude
     # under the 2M row gate
     row_bytes = 24 + 16 * 31
@@ -300,11 +297,14 @@ def test_wide_frontier_gate_is_byte_aware(spark):
 
     edges = [(10, 11, 3), (11, 12, 2), (12, 13, 5), (11, 13, 4)]
     g = _build(spark, edges)
-    arcs = _residual_arcs(g.edges.persist(), None, True).persist()
+    arcs = _residual_arcs(g.edges.persist(), None, 0, 1).persist()
     seed = spark.createDataFrame(
         [(10, [10], [])], "vertex long, verts array<long>, ress array<long>"
     )
-    f1 = _extend(seed, arcs, seed, True, 1, 42, 1, None, n_frontier=1, n_own=1).localCheckpoint()
+    f1 = _extend(
+        seed, arcs, seed, True, 1, 42, 1,
+        n_frontier=1, n_own=1, frontier_row_bytes=56, arc_partitions=1,
+    ).localCheckpoint()
     # at fixture scale Catalyst auto-broadcasts the tiny arc cache and
     # masks the gate; pin the GATE's behaviour by making explicit hints
     # the only broadcast source
@@ -315,8 +315,9 @@ def test_wide_frontier_gate_is_byte_aware(spark):
         # budget: the frontier join must fall back to the shuffle join
         # while the narrow visited anti-join stays broadcast (row gate)
         wide = _extend(
-            f1, arcs, f1, True, 1, 42, 2, None,
+            f1, arcs, f1, True, 1, 42, 2,
             n_frontier=2, n_own=3, frontier_row_bytes=STATE_BROADCAST_BYTES,
+            arc_partitions=1,
         )
         plan = wide._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -325,8 +326,9 @@ def test_wide_frontier_gate_is_byte_aware(spark):
         assert "BroadcastHashJoin" in plan, plan[:2000]
         # under the bound, the frontier broadcasts: no shuffle join left
         ok = _extend(
-            f1, arcs, f1, True, 1, 42, 2, None,
+            f1, arcs, f1, True, 1, 42, 2,
             n_frontier=2, n_own=3, frontier_row_bytes=row_bytes,
+            arc_partitions=1,
         )
         okplan = ok._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

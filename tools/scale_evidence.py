@@ -101,9 +101,7 @@ def main() -> int:
         g,
         sources=[0],
         sinks=[n - 1],
-        config=MaxFlowConfig(
-            excess_list_max=4, meet_extra_rounds=2, validate=True, verbose=True
-        ),
+        config=MaxFlowConfig(excess_list_max=4, meet_extra_rounds=2, validate=True),
     )
     out["max_flow"] = {
         "sec": round(time.time() - t0, 1),
