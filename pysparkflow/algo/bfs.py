@@ -20,7 +20,7 @@ from typing import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pysparkflow.engine import partitioning
+from pysparkflow.engine import partitioning, rounds
 from pysparkflow.graph.graph import FlowGraph
 
 
@@ -42,9 +42,9 @@ def bfs_distances(
     )
     arcs, n_arcs, arc_parts = partitioning.sized_cache(sym, "src")
     src_rows = [(int(x),) for x in dict.fromkeys(int(x) for x in sources)]
-    # localCheckpoint per round: materializes AND truncates lineage so
-    # planning cost stays flat across rounds (SURVEY.md §7.3)
-    frontier = spark.createDataFrame(src_rows, "vertex long").localCheckpoint()
+    # every round's frontier is cut (engine/rounds.py); the literal seed
+    # frontier and the empty ``prev`` have no lineage to cut
+    frontier = spark.createDataFrame(src_rows, "vertex long")
     levels: list[DataFrame] = [
         frontier.withColumn("distance", F.lit(1).cast("int"))
     ]
@@ -54,7 +54,7 @@ def bfs_distances(
     # full visited set. Per-round anti-join work is O(|F_d| + |F_{d-1}|)
     # instead of O(all reached): at a 100x scale-up with a larger diameter
     # the old re-union of every prior level is the dominant scan.
-    prev = frontier.where(F.lit(False)).localCheckpoint()
+    prev = frontier.where(F.lit(False))
     dist = 1
     while True:
         if max_depth is not None and dist >= max_depth:
@@ -63,11 +63,11 @@ def bfs_distances(
         # frontier rows <= |V| <= n_arcs (and seen = two frontiers):
         # broadcast-gated sides keep the arc cache unshuffled per round
         # (engine/partitioning.py state_join_side) — without the
-        # explicit hint the checkpointed frontier's unknown size
+        # explicit hint the cut frontier's unknown size
         # statistics force a sort-merge join that re-exchanges and
         # re-sorts the cached graph every round
         fr = partitioning.state_join_side(frontier, n_arcs, arc_parts, "vertex")
-        nxt = (
+        nxt, n = rounds.cut_count(
             arcs.join(fr, arcs.src == fr.vertex)
             .select(F.col("dst").alias("vertex"))
             .distinct()
@@ -76,12 +76,7 @@ def bfs_distances(
                 "vertex",
                 "left_anti",
             )
-            # lazy + count: the count job computes every partition, so it
-            # materializes the checkpoint itself — one job per round
-            # instead of checkpoint-job + count-job (r13 opt, guide §2.6)
-            .localCheckpoint(eager=False)
         )
-        n = nxt.count()
         if n == 0:
             break
         dist += 1
@@ -95,17 +90,10 @@ def bfs_distances(
             merged = levels[0]
             for lv in levels[1:]:
                 merged = merged.unionAll(lv)
-            # lazy: every level is already a materialized checkpoint, so
-            # the fold only needs the PLAN truncated — the final consumer
-            # computes the union once; an eager cut here re-copied every
-            # accumulated row per fold (r13 opt)
-            levels = [merged.localCheckpoint(eager=False)]
+            levels = [rounds.cut(merged)]
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionAll(lv)
-    # lazy for the same reason: out unions checkpointed frontiers only
-    # (no arc lineage), and the caller's first action materializes it —
-    # the eager job was a pure extra pass over the result
-    out = out.localCheckpoint(eager=False)
+    out = rounds.cut(out)
     arcs.unpersist()
     return out

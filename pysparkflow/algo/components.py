@@ -23,15 +23,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pysparkflow.engine import partitioning
+from pysparkflow.engine import partitioning, rounds
 from pysparkflow.graph.graph import FlowGraph
 
+# convergence takes O(log diameter) rounds (3 on the bench graph); a run
+# still changing labels after this many raises instead of returning them
+MAX_ROUNDS = 50
 
-def connected_components(
-    graph: FlowGraph, max_iter: int = 50, rows_hint: int | None = None
-) -> DataFrame:
+
+def connected_components(graph: FlowGraph, rows_hint: int | None = None) -> DataFrame:
     """Returns (vertex BIGINT, component BIGINT) where component is the
-    minimum vertex id in the component.
+    minimum vertex id in the component. Raises ``RuntimeError`` if the
+    labels have not converged after ``MAX_ROUNDS`` rounds.
 
     ``rows_hint``: approximate arc count when the caller already knows it
     (e.g. dedup resolution counted its pair table materializing the memo
@@ -46,19 +49,15 @@ def connected_components(
         graph.edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
     )
     arcs, n_arcs, arc_parts = partitioning.sized_cache(sym, "b", rows=rows_hint)
-    labels = (
+    labels = rounds.cut(
         arcs.groupBy("a")
         .agg(F.min("b").alias("nb_min"))
         .select(
             F.col("a").alias("vertex"),
             F.least(F.col("a"), F.col("nb_min")).alias("component"),
         )
-        # lazy: round 1's first job over labels computes every partition
-        # and materializes the checkpoint — the eager cut was one extra
-        # dedicated job (r13 opt; plan truncation is identical)
-        .localCheckpoint(eager=False)
     )
-    for _ in range(max_iter):
+    for _ in rounds.bounded("connected components", MAX_ROUNDS):
         # labels rows <= |V| <= n_arcs: broadcast-gated state sides keep
         # the arc cache (and the vertex-sized left joins' stream sides)
         # free of per-round exchanges (engine/partitioning.py)
@@ -80,7 +79,7 @@ def connected_components(
         lookup = stepped.select(
             F.col("vertex").alias("lv"), F.col("component").alias("ll")
         )
-        doubled = (
+        doubled = rounds.cut(
             stepped.join(
                 partitioning.state_join_side(lookup, n_arcs, arc_parts, "lv"),
                 stepped.component == lookup.lv,
@@ -92,15 +91,11 @@ def connected_components(
                     F.col("component"), F.coalesce(F.col("ll"), F.col("component"))
                 ).alias("component"),
             )
-            # lazy + the convergence count below: the count job streams
-            # every doubled partition through the join, materializing the
-            # checkpoint in the same job (r13 opt)
-            .localCheckpoint(eager=False)
         )
-        # convergence check: both sides are checkpointed |V|-row tables
-        # with no size statistics — gate the old-labels side so the
-        # fresh table is probed in place instead of a per-round
-        # sort-merge exchange of both
+        # convergence check: it streams every doubled partition, so it
+        # materializes the cut. Both sides are cut |V|-row tables with no
+        # size statistics — gate the old-labels side so the fresh table is
+        # probed in place instead of a per-round sort-merge exchange of both
         changed = (
             doubled.alias("n")
             .join(

@@ -72,7 +72,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from pysparkflow.engine import partitioning
+from pysparkflow.engine import partitioning, rounds
 from pysparkflow.engine.acceptor import GreedyAcceptor
 from pysparkflow.engine.metrics import RoundMetrics
 from pysparkflow.graph.graph import FlowGraph
@@ -176,14 +176,12 @@ def _repair_paths_join(df: DataFrame, delta_df: DataFrame) -> DataFrame:
     exploded arcs can be re-assembled; mid is only stable if ``df``'s rows
     re-materialize in the same partition/order every time the plan branch
     is evaluated — the two uses of ``base`` below are separate branches of
-    one DAG. A lazy localCheckpoint pins the row layout inside this
-    function instead of relying on callers passing pre-checkpointed input
-    (they do today — maxflow epoch loop checkpoints each round's paths —
-    but the invariant belongs here). Path state is O(accepted paths x
+    one DAG. A lazy cut (engine/rounds.py) pins the row layout inside this
+    function instead of relying on callers passing pre-cut input (they do
+    today — the maxflow epoch loop cuts each round's paths — but the
+    invariant belongs here). Path state is O(accepted paths x
     depth), thousands of rows, so the pin costs milliseconds."""
-    base = df.localCheckpoint(eager=False).withColumn(
-        "_rid", F.monotonically_increasing_id()
-    )
+    base = rounds.cut(df).withColumn("_rid", F.monotonically_increasing_id())
     seeds = base.where(F.size("ress") == 0).select("vertex", "verts", "ress")
     ex = (
         base.where(F.size("ress") > 0)
@@ -345,7 +343,7 @@ def max_flow(
     phase_cache: list[DataFrame] = []
 
     # stored-path state carried across acceptance epochs:
-    # consolidated, repaired, localCheckpointed path tables per side, plus
+    # consolidated, repaired, materialized path tables per side, plus
     # per-side row-count UPPER BOUNDS (repair only drops rows, so the
     # accumulated visited counts stay valid) — the broadcast gates below
     # need a bound, never an exact count (guide §3.1)
@@ -375,17 +373,15 @@ def max_flow(
         phase_cache.append(arcs)
         _seg("arcs_build", _t)
 
-        # frontiers are localCheckpointed every round: this both materializes
-        # the data AND truncates the logical plan — with persist() alone the
-        # plan tree deepens every round and Catalyst/AQE planning time comes
-        # to dominate (the iterative-lineage trap, SURVEY.md §7.3)
+        # frontiers are cut every round (engine/rounds.py): with persist()
+        # alone the plan tree deepens every round and Catalyst/AQE planning
+        # time comes to dominate (the iterative-lineage trap, SURVEY.md §7.3)
         candidates: list = []
         rnd = 0
         if stored is None:
             _t = _time.time()
             seed_rows = [(int(s_id), [int(s_id)], []), (int(t_id), [int(t_id)], [])]
-            # literal 1-row DFs: no lineage to truncate, nothing to
-            # materialize — checkpointing them was two pure-overhead jobs
+            # literal 1-row DFs: no lineage to cut, nothing to materialize
             frontier_s = spark.createDataFrame([seed_rows[0]], _FRONTIER_SCHEMA)
             frontier_t = spark.createDataFrame([seed_rows[1]], _FRONTIER_SCHEMA)
             paths_s, paths_t = frontier_s, frontier_t
@@ -439,19 +435,23 @@ def max_flow(
             extend_s = n_t == 0 or (n_s > 0 and n_s <= n_t)
             frontier = frontier_s if extend_s else frontier_t
             own = paths_s if extend_s else paths_t
-            new_f = _extend(
-                frontier,
-                arcs,
-                own,
-                extend_s,
-                cfg.excess_list_max,
-                cfg.seed,
-                rnd,
-                n_frontier=n_s if extend_s else n_t,
-                n_own=v_s if extend_s else v_t,
-                frontier_row_bytes=_path_row_bytes(),
-                arc_partitions=edge_parts,
-            ).localCheckpoint(eager=False)  # truncate lineage; the count below materializes
+            # the meet collect below probes the blocks this count
+            # materialized: a cheap second job
+            new_f, n_new = rounds.cut_count(
+                _extend(
+                    frontier,
+                    arcs,
+                    own,
+                    extend_s,
+                    cfg.excess_list_max,
+                    cfg.seed,
+                    rnd,
+                    n_frontier=n_s if extend_s else n_t,
+                    n_own=v_s if extend_s else v_t,
+                    frontier_row_bytes=_path_row_bytes(),
+                    arc_partitions=edge_parts,
+                )
+            )
             other = paths_t if extend_s else paths_s
             o = other.select(
                 F.col("vertex"),
@@ -470,12 +470,6 @@ def max_flow(
                 .orderBy("vertex", F.xxhash64("verts"))
                 .limit(cfg.max_candidates - len(candidates))
             )
-            # ONE job materializes the lazy checkpoint and returns the
-            # convergence count (the batch-8 checkpoint+count fusion —
-            # eager checkpoint + concurrent count was two jobs of full
-            # compute + scan); the meet collect then probes the already-
-            # checkpointed blocks, a cheap second job
-            n_new = new_f.count()
             meets = meets_df.collect()
             if extend_s:
                 frontier_s, n_s = new_f, n_new
@@ -556,16 +550,13 @@ def max_flow(
         _t = _time.time()
         deltas = acceptor.flow_deltas()
         delta_df = spark.createDataFrame(deltas, schema="u long, v long, f long")
-        # lazy checkpoint + count: ONE job materializes the checkpoint and
-        # returns the count (eager=True + count was two)
-        flows = (
+        # cut each phase (iteration GC, §4), counted in the same job
+        flows, flow_edge_count = rounds.cut_count(
             flows.unionAll(delta_df)
             .groupBy("u", "v")
             .agg(F.sum("f").alias("f"))
             .where(F.col("f") != 0)
-            .localCheckpoint(eager=False)  # cut lineage each phase (iteration GC, §4)
         )
-        flow_edge_count = flows.count()
         _seg("flows_update", _t)
 
         _t = _time.time()
@@ -587,14 +578,14 @@ def max_flow(
             )
             rep_s = _repair_paths_join(paths_s, repair_df)
             rep_t = _repair_paths_join(paths_t, repair_df)
-        # ONE materialization job for both sides: tag + union +
-        # checkpoint, then split by tag over the cached partitions
-        # (coalesce bounds the union-accumulated partition count)
-        tagged = (
+        # ONE eager cut for both sides: tag + union + materialize, then
+        # split by tag over the cut partitions (coalesce bounds the
+        # union-accumulated partition count). No count is wanted, so an
+        # eager cut (2 jobs) beats a lazy cut plus count (3)
+        tagged = rounds.materialize(
             rep_s.withColumn("_side", F.lit("s"))
             .unionAll(rep_t.withColumn("_side", F.lit("t")))
             .coalesce(n_shuffle)
-            .localCheckpoint()
         )
         stored = (
             tagged.where(F.col("_side") == "s").drop("_side"),

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pysparkflow.algo.maxflow import MaxFlowConfig, MaxFlowResult, _residual_arcs, max_flow
-from pysparkflow.engine import partitioning
+from pysparkflow.engine import partitioning, rounds
 from pysparkflow.graph.graph import FlowGraph
 
 
@@ -65,12 +65,13 @@ def min_cut(
     # directed BFS over residual arcs: frontier-only shuffles, the arc
     # table is scanned from cache each round (schimmy); the frontier and
     # reach sides are broadcast-gated (state_join_side) so the cached
-    # residual arcs are never re-exchanged or re-sorted per round
+    # residual arcs are never re-exchanged or re-sorted per round. The
+    # reach cut is materialized by the next round's job that reads it.
     reach = spark.createDataFrame([(int(s_id),)], "vertex long")
     frontier = reach
     while True:
         fr = partitioning.state_join_side(frontier, n_res, edge_parts, "vertex")
-        nxt = (
+        nxt, n = rounds.cut_count(
             arcs.join(fr, fr.vertex == arcs.src)
             .select(F.col("dst").alias("vertex"))
             .distinct()
@@ -79,11 +80,10 @@ def min_cut(
                 "vertex",
                 "left_anti",
             )
-            .localCheckpoint()
         )
-        if not nxt.take(1):
+        if n == 0:
             break
-        reach = reach.unionByName(nxt).localCheckpoint()
+        reach = rounds.cut(reach.unionByName(nxt))
         frontier = nxt
     arcs.unpersist(blocking=False)
 

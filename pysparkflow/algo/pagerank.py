@@ -19,8 +19,8 @@ Scale shape (100 TB): the edge table with per-source out-degree attached
 is computed ONCE and cached, hash-partitioned by src; each iteration
 shuffles only the (vertex, rank) table — |V| rows, orders of magnitude
 below |E| — into the join, and the aggregation combiner reduces map-side.
-``localCheckpoint`` every few rounds keeps the plan from growing with the
-iteration count (the reference's file-per-round, D11).
+Lineage is cut per round by engine/rounds.py (the reference's
+file-per-round, D11).
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pysparkflow.engine import partitioning
+from pysparkflow.engine import partitioning, rounds
 from pysparkflow.engine.cache import track
 
 
@@ -83,12 +83,12 @@ def _rank_rounds(
     iterations: int,
     upper_rows: int,
     arc_parts: int,
-    checkpoint_every: int,
     indegree_complete: bool,
 ) -> DataFrame:
     """The power-iteration rounds both rankers share; they differ only in
     the ``restart`` term and the gate bound ``upper_rows`` on |V|."""
-    for i in range(iterations):
+
+    def step(ranks: DataFrame) -> DataFrame:
         # state_join_side: broadcast the |V|-row rank table (or
         # co-partition it above the gate) so the cached arcs are never
         # exchanged or sorted per round — the schimmy promise made
@@ -108,26 +108,17 @@ def _rank_rounds(
         )
         if indegree_complete:
             # the aggregate's key set is already all of verts
-            ranks = contrib.select(
+            return contrib.select(
                 "vertex",
                 (restart + F.lit(damping) * F.col("mass")).alias("rank"),
             )
-        else:
-            # vertices with no inbound arcs keep only the restart term
-            ranks = verts.join(contrib, "vertex", "left").select(
-                "vertex",
-                (
-                    restart + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
-                ).alias("rank"),
-            )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            # lazy: plan truncation is immediate; the CALLER's first full
-            # action materializes the chain of lazy checkpoints (rounds
-            # run no per-round action here — a partial action like
-            # take/limit recomputes unmaterialized partitions until a
-            # full pass runs). No dedicated cut job (r13 opt, ADVICE r13)
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+        # vertices with no inbound arcs keep only the restart term
+        return verts.join(contrib, "vertex", "left").select(
+            "vertex",
+            (restart + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias("rank"),
+        )
+
+    return rounds.unrolled(ranks, step, iterations)
 
 
 def pagerank(
@@ -136,7 +127,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 5,
     validate: bool = True,
     indegree_complete: bool = False,
 ) -> DataFrame:
@@ -158,11 +148,14 @@ def pagerank(
     identity costing one sort-merge stage per round (VERDICT r5 #5,
     the iterative scheduler floor). Semantics are unchanged where the
     precondition holds; leave False for general directed inputs.
-    Returns (vertex, rank)."""
+    An empty edge table gives an empty result. Lineage is cut per round
+    (engine/rounds.py). Returns (vertex, rank)."""
     e, arcs, verts, _, arc_parts = _outdegree_arcs(
         edges, src, dst, validate, "pagerank"
     )
-    n = verts.count()  # materializes arcs/verts from e's cache
+    # materializes arcs/verts from e's cache; an empty graph has no
+    # ranks to scale, so any positive n leaves its (empty) result alone
+    n = max(verts.count(), 1)
     e.unpersist()  # rounds scan arcs; the raw edge cache is done
     ranks = verts.select("vertex", (F.lit(1.0) / n).alias("rank"))
     return _rank_rounds(
@@ -174,7 +167,6 @@ def pagerank(
         iterations,
         n,
         arc_parts,
-        checkpoint_every,
         indegree_complete,
     )
 
@@ -186,7 +178,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 5,
     validate: bool = True,
     indegree_complete: bool = False,
 ) -> DataFrame:
@@ -232,6 +223,5 @@ def personalized_pagerank(
         iterations,
         n_edges,
         arc_parts,
-        checkpoint_every,
         indegree_complete,
     )

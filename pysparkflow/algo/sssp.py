@@ -23,8 +23,8 @@ replays the identical rounds as unrolled CTEs.
 Scale shape: the static arc table is cached once and never reshuffled
 (schimmy, D13); each round shuffles only the frontier-sized dist table.
 Unlike the excess-path frontier, dist rows are one scalar per vertex —
-state is O(|V|) regardless of round count. ``localCheckpoint`` on a
-cadence cuts lineage for large hop bounds.
+state is O(|V|) regardless of round count. Lineage is cut per round by
+engine/rounds.py.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pysparkflow.engine import partitioning
+from pysparkflow.engine import partitioning, rounds
 
 
 def bounded_sssp(
@@ -42,18 +42,14 @@ def bounded_sssp(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Cheapest path cost from any of ``sources`` using at most
     ``max_hops`` edges; unreached vertices are absent. Weights must be
     non-negative. Returns (vertex, dist).
 
-    The whole relaxation is one lazy plan; ``checkpoint_every`` bounds
-    how many rounds of join+agg (and their runtime broadcasts) are live
-    at once. Deep bounds (hypercube-diameter runs, tools/iter_scale.py)
-    exhausted the driver at cadence 8 — 4 keeps plan depth and
-    broadcast lifetime bounded and leaves short runs (max_hops <= 4,
-    the registry entry) checkpoint-free.
+    Each round reads ``dist`` twice (the union and the join), so its
+    lineage is cut every round (engine/rounds.py): an uncut plan would
+    recompute the state once per read.
 
     The returned lazy plan still scans the cached arc table: release it
     with ``engine.cache.release_tracked`` once the result is consumed."""
@@ -71,7 +67,8 @@ def bounded_sssp(
     dist = spark.createDataFrame(
         [(int(s), 0.0) for s in sources], "vertex long, dist double"
     )
-    for i in range(max_hops):
+
+    def step(dist: DataFrame) -> DataFrame:
         # candidate rows stay un-aggregated: min(dist, min(cand)) ==
         # min over the union, so one groupBy replaces the former
         # per-round pre-aggregation + merge pair (one shuffle saved per
@@ -88,13 +85,6 @@ def bounded_sssp(
             F.col("v").alias("vertex"),
             (F.col("dist") + F.col("w")).alias("dist"),
         )
-        dist = (
-            dist.unionByName(cand)
-            .groupBy("vertex")
-            .agg(F.min("dist").alias("dist"))
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < max_hops:
-            # lazy: the next round's first job over dist materializes
-            # the checkpoint — no dedicated cut job (r13 opt)
-            dist = dist.localCheckpoint(eager=False)
-    return dist
+        return dist.unionByName(cand).groupBy("vertex").agg(F.min("dist").alias("dist"))
+
+    return rounds.unrolled(dist, step, max_hops)

@@ -1,0 +1,62 @@
+"""How every iterative graph loop cuts lineage, counts for convergence and
+bounds its rounds — the reference's discipline of one HDFS file per
+MapReduce round, so lineage never outlives a round (D11,
+ff1/FordFulkerson.java:240-244). The nine loops (bfs, components, both
+pageranks, bounded SSSP, label propagation, k-core, max-flow, min-cut)
+name no checkpoint themselves.
+
+A *cut* is a lazy local checkpoint: the plan is truncated at once and the
+first job computing every partition materializes it (AQE runs the frame's
+own shuffle and broadcast stages when the cut is made). Every round's
+state but the last is cut, so no loop's plan, nor the plan it returns,
+holds more than one round of joins. On Q12 at ``local[4]`` that costs no
+loop an extra job, and a round that reads its state twice stops
+recomputing it per read (bounded SSSP at 4 hops: 30 -> 15 jobs).
+
+A local checkpoint lives in executor storage: losing an executor fails
+the loop, where the reference's HDFS rounds would survive.
+"""
+
+from __future__ import annotations
+
+from typing import Callable, Iterator
+
+from pyspark.sql import DataFrame
+
+
+def cut(df: DataFrame) -> DataFrame:
+    """``df`` with its plan truncated; materialized by its first full job."""
+    return df.localCheckpoint(eager=False)
+
+
+def cut_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """A converging loop's count: cut ``df`` and count it in the job that
+    materializes the cut."""
+    df = cut(df)
+    return df, df.count()
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """An eager cut, for state many later jobs read and nobody counts: two
+    jobs, where ``cut_count`` costs three."""
+    return df.localCheckpoint()
+
+
+def unrolled(
+    state: DataFrame, step: Callable[[DataFrame], DataFrame], n: int
+) -> DataFrame:
+    """A fixed-round loop: ``step`` applied ``n`` times, every round but
+    the last cut. The last stays a plan the caller's operators fuse into."""
+    for i in range(n):
+        state = step(state)
+        if i + 1 < n:
+            state = cut(state)
+    return state
+
+
+def bounded(name: str, limit: int) -> Iterator[int]:
+    """Round indices ``0 .. limit - 1`` for a loop that ``break``s once it
+    converges; raises ``RuntimeError`` if the loop runs them all, so no
+    caller reads a partial result."""
+    yield from range(limit)
+    raise RuntimeError(f"{name} did not stabilize in {limit} rounds")

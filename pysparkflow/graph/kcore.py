@@ -19,8 +19,8 @@ registry entry asserts convergence within the unrolled horizon).
 
 Scale shape: degrees are a combiner-friendly aggregation over the edge
 list; the per-round semi-joins shuffle the shrinking edge table by
-endpoint. At 100 TB the first rounds dominate; lineage is cut with
-localCheckpoint on a cadence so the loop depth never accretes plan cost.
+endpoint. At 100 TB the first rounds dominate; lineage is cut every
+round by engine/rounds.py so the loop depth never accretes plan cost.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pysparkflow.engine import partitioning
+from pysparkflow.engine import partitioning, rounds
 from pysparkflow.graph.triangles import canonical_edges
 
 
@@ -42,10 +42,7 @@ def kcore_vertices(
     """Vertices of the k-core. Converges in at most |V| rounds; raises
     if ``max_rounds`` is hit while still unstable (callers choosing a
     replay horizon need the guarantee, not a silent partial peel).
-    Returns (vertex,). Deterministic — pure function of the graph.
-    Lineage truncates every round (see the loop comment — a peel
-    round's plan references the edge table three times, so anything
-    less than per-round truncation grows the plan tree 3^rounds)."""
+    Returns (vertex,). Deterministic — pure function of the graph."""
     # edge table cached once at the data-sized partition count
     # (engine/partitioning.py): the partition count is every peel
     # round's map-side task count; sized_cache avoids computing the
@@ -55,8 +52,7 @@ def kcore_vertices(
     e, n_before, arc_parts = partitioning.sized_cache(
         canonical_edges(edges, src, dst), "a"
     )
-    rounds = 0
-    while True:
+    for _ in rounds.bounded("k-core", max_rounds):
         deg = (
             e.select(F.col("a").alias("v"))
             .unionAll(e.select(F.col("b").alias("v")))
@@ -77,34 +73,19 @@ def kcore_vertices(
         kb = partitioning.state_join_side(
             keep.select(F.col("v").alias("b")), 2 * n_before, arc_parts, "b"
         )
-        # localCheckpoint EVERY round, not persist + an occasional cut:
-        # each round's plan references e THREE times (deg + both semi
-        # joins), so the lineage tree grows 3^rounds — persist bounds
-        # re-execution but not plan-tree size, and AQE's plan-string
-        # rendering of a deep peel OOM'd the driver (seen at round ~4
-        # on a loaded heap). The round materializes anyway for the
-        # convergence count, so truncation here is nearly free.
-        # lazy + count below: the convergence count computes every
-        # partition, materializing the checkpoint in the same job
-        # (was checkpoint-job + count-job; r13 opt)
-        e2 = (
-            e.join(ka, "a", "left_semi")
-            .join(kb, "b", "left_semi")
-            .localCheckpoint(eager=False)
+        # a peel round's plan references e three times (deg + both semi
+        # joins), so an uncut loop's plan tree grows 3^rounds
+        e2, n_after = rounds.cut_count(
+            e.join(ka, "a", "left_semi").join(kb, "b", "left_semi")
         )
+        e.unpersist()
+        keep.unpersist()
+        e = e2
         # stable iff no edge was dropped (vertex counts can't change
         # without edge counts changing)
-        n_after = e2.count()
-        e.unpersist()
-        rounds += 1
-        e = e2
         if n_after == n_before:
-            keep.unpersist()
             break
-        keep.unpersist()
         n_before = n_after
-        if rounds >= max_rounds:
-            raise RuntimeError(f"k-core did not stabilize in {max_rounds} rounds")
     out = (
         e.select(F.col("a").alias("vertex"))
         .unionAll(e.select(F.col("b").alias("vertex")))

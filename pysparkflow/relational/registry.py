@@ -2877,15 +2877,10 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = half.unionByName(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    # checkpoint_every=_PR_ITERS -> no mid-run checkpoint: at 10 rounds
-    # the lineage is shallow enough that cutting it costs more (an extra
-    # job) than it saves (measured 7.6s -> 6.1s at sf0.01); long runs
-    # keep the default cadence
     out = pagerank(
         sym,
         iterations=_PR_ITERS,
         damping=_PR_DAMPING,
-        checkpoint_every=_PR_ITERS,
         # symmetric by construction (both directions unioned above), so
         # the outdegree>=1 precondition holds — skip the validation job
         validate=False,
@@ -4226,7 +4221,6 @@ def q_ppr_related(spark: SparkSession, sf_dir: str) -> DataFrame:
         sources=_PPR_SEEDS,
         iterations=_PR_ITERS,
         damping=_PR_DAMPING,
-        checkpoint_every=_PR_ITERS,
         # symmetric by construction and the seeds are known lineitem
         # fold residues — skip the two validation jobs in the bench path
         validate=False,

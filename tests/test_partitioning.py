@@ -1,8 +1,11 @@
-"""engine/partitioning.py: the data-sized partition clamp for iterative
-arc caches, the broadcast gates, and the cache lifetime of the nine
-iterative graph loops built on them."""
+"""engine/partitioning.py and engine/rounds.py: the data-sized partition
+clamp for iterative arc caches, the broadcast gates, and the cache
+lifetime, lineage cuts, round bounds and hostile-input answers of the
+nine iterative graph loops built on them."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 
@@ -83,12 +86,16 @@ def test_state_join_side_copartitions_above_gate(spark):
 
 # a 4-cycle with a chord plus a pendant vertex: every loop has work to do
 LOOP_EDGES = [(1, 2, 3), (2, 3, 2), (3, 4, 2), (4, 1, 3), (1, 3, 1), (4, 5, 4)]
+# hostile inputs: no edges at all; self-loops on both ends of the path
+# 1 - 2 - 5 plus a duplicated arc and its reverse
+EMPTY_EDGES: list = []
+SELF_DUP_EDGES = [(1, 1, 4), (1, 2, 3), (1, 2, 3), (2, 1, 2), (2, 5, 5), (5, 5, 1)]
 
 
-def _loop_inputs(spark):
+def _loop_inputs(spark, edges=LOOP_EDGES):
     from pysparkflow.graph.graph import FlowGraph
 
-    pairs = spark.createDataFrame(LOOP_EDGES, "src long, dst long, capacity long")
+    pairs = spark.createDataFrame(edges, "src long, dst long, capacity long")
     g = FlowGraph.from_edge_pairs(spark, pairs, cap_col="capacity")
     arcs = pairs.select("src", "dst").unionAll(
         pairs.select(pairs.dst.alias("src"), pairs.src.alias("dst"))
@@ -97,8 +104,9 @@ def _loop_inputs(spark):
     return g, pairs, arcs, weighted
 
 
-def _run_loop(spark, name):
-    """Run one iterative loop and return the DataFrames its caller reads."""
+def _run_loop(spark, name, edges=LOOP_EDGES, **kw):
+    """Run one iterative loop (source 1, sink 5) and return the DataFrames
+    its caller reads; ``kw`` goes to the fixed-round loops."""
     from pysparkflow.algo import bfs_distances, connected_components
     from pysparkflow.algo.maxflow import max_flow
     from pysparkflow.algo.mincut import min_cut
@@ -107,7 +115,7 @@ def _run_loop(spark, name):
     from pysparkflow.graph.kcore import kcore_vertices
     from pysparkflow.graph.labelprop import label_propagation
 
-    g, pairs, arcs, weighted = _loop_inputs(spark)
+    g, pairs, arcs, weighted = _loop_inputs(spark, edges)
     if name == "max_flow":
         return [max_flow(g, [1], [5]).flows]
     if name == "min_cut":
@@ -117,10 +125,10 @@ def _run_loop(spark, name):
         {
             "bfs": lambda: bfs_distances(g, [1]),
             "components": lambda: connected_components(g),
-            "pagerank": lambda: pagerank(arcs),
-            "personalized_pagerank": lambda: personalized_pagerank(arcs, [1]),
-            "bounded_sssp": lambda: bounded_sssp(weighted, [1]),
-            "label_propagation": lambda: label_propagation(arcs),
+            "pagerank": lambda: pagerank(arcs, **kw),
+            "personalized_pagerank": lambda: personalized_pagerank(arcs, [1], **kw),
+            "bounded_sssp": lambda: bounded_sssp(weighted, [1], **kw),
+            "label_propagation": lambda: label_propagation(arcs, **kw),
             "kcore": lambda: kcore_vertices(pairs, k=2),
         }[name]()
     ]
@@ -130,6 +138,13 @@ LOOPS = [
     "bfs", "components", "pagerank", "personalized_pagerank", "bounded_sssp",
     "label_propagation", "kcore", "max_flow", "min_cut",
 ]
+# the fixed-round loops and the name of their round-count argument
+ROUND_ARG = {
+    "pagerank": "iterations",
+    "personalized_pagerank": "iterations",
+    "bounded_sssp": "max_hops",
+    "label_propagation": "rounds",
+}
 
 
 @pytest.mark.parametrize("loop", LOOPS)
@@ -184,3 +199,97 @@ def test_min_cut_never_broadcasts_past_the_gate(spark, monkeypatch):
     assert not any("BroadcastHashJoin" in p for p in plans), [
         p for p in plans if "BroadcastHashJoin" in p
     ][0][:2000]
+
+
+def _join_count(df) -> int:
+    plan = df._jdf.queryExecution().analyzed().treeString()
+    return len(re.findall(r"^[\s:+\-|]*Join ", plan, re.M))
+
+
+@pytest.mark.parametrize("loop", sorted(ROUND_ARG))
+def test_fixed_round_plan_holds_one_round(spark, loop):
+    """Every round but the last is cut (engine/rounds.py), so the frame a
+    fixed-round loop returns after eight rounds holds no more joins than
+    an uncut single round does."""
+    from pysparkflow.engine.cache import release_tracked
+
+    def joins(n):
+        [df] = _run_loop(spark, loop, **{ROUND_ARG[loop]: n})
+        return _join_count(df)
+
+    one, eight = joins(1), joins(8)
+    release_tracked()
+    assert one > 0
+    assert eight <= one, (loop, eight, one)
+
+
+def _rows(df):
+    return sorted(
+        tuple(round(x, 9) if isinstance(x, float) else x for x in r)
+        for r in df.collect()
+    )
+
+
+# today's answers on the hostile inputs; source 1, sink 5. On the empty
+# table the super-source takes id 1 (graph.with_super_nodes numbers it past
+# the largest edge id), so min_cut's S side is that one vertex.
+HOSTILE = {
+    ("empty", "bfs"): [[(1, 1)]],
+    ("empty", "components"): [[]],
+    ("empty", "pagerank"): [[]],
+    ("empty", "bounded_sssp"): [[(1, 0.0)]],
+    ("empty", "label_propagation"): [[]],
+    ("empty", "kcore"): [[]],
+    ("empty", "max_flow"): [[]],
+    ("empty", "min_cut"): [[], [(1,)]],
+    ("self_dup", "bfs"): [[(1, 1), (2, 2), (5, 3)]],
+    ("self_dup", "components"): [[(1, 1), (2, 1), (5, 1)]],
+    ("self_dup", "pagerank"): [[(1, 0.39375779), (2, 0.329288905), (5, 0.276953305)]],
+    ("self_dup", "personalized_pagerank"): [
+        [(1, 0.46135838), (2, 0.258783653), (5, 0.112514724)]
+    ],
+    ("self_dup", "bounded_sssp"): [[(1, 0.0), (2, 3.0), (5, 8.0)]],
+    ("self_dup", "label_propagation"): [[(1, 1), (2, 2), (5, 5)]],
+    ("self_dup", "kcore"): [[]],
+    # the super-source is 6 and the super-sink 7
+    ("self_dup", "max_flow"): [[(1, 2, 5), (1, 6, -5), (2, 5, 5), (5, 7, 5)]],
+    ("self_dup", "min_cut"): [[(2, 5, 5)], [(1,), (2,), (6,)]],
+}
+
+
+@pytest.mark.parametrize("loop", LOOPS)
+@pytest.mark.parametrize("table", ["empty", "self_dup"])
+def test_loop_on_hostile_input(spark, table, loop):
+    """An empty edge table, and self-loops plus duplicate arcs, go through
+    every loop. Pagerank on the empty table returns an empty frame; the
+    personalized one rejects a seed that is no vertex."""
+    from pysparkflow.engine.cache import release_tracked
+
+    edges = {"empty": EMPTY_EDGES, "self_dup": SELF_DUP_EDGES}[table]
+    try:
+        if (table, loop) == ("empty", "personalized_pagerank"):
+            with pytest.raises(ValueError, match="seeds are not vertices"):
+                _run_loop(spark, loop, edges)
+            return
+        got = [_rows(df) for df in _run_loop(spark, loop, edges)]
+    finally:
+        release_tracked()
+    assert got == HOSTILE[table, loop]
+
+
+def test_components_raises_at_round_bound(spark, monkeypatch):
+    """A components run still changing labels at its round bound raises
+    instead of returning unconverged labels."""
+    from pysparkflow.algo import components
+    from pysparkflow.engine.cache import release_tracked
+    from pysparkflow.graph.graph import FlowGraph
+
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "src long, dst long"
+    )
+    monkeypatch.setattr(components, "MAX_ROUNDS", 1)
+    try:
+        with pytest.raises(RuntimeError, match="did not stabilize in 1 rounds"):
+            components.connected_components(FlowGraph.from_edge_pairs(spark, path))
+    finally:
+        release_tracked()
