@@ -177,10 +177,10 @@ def _repair_paths_join(df: DataFrame, delta_df: DataFrame) -> DataFrame:
     re-materialize in the same partition/order every time the plan branch
     is evaluated — the two uses of ``base`` below are separate branches of
     one DAG. A lazy cut (engine/rounds.py) pins the row layout inside this
-    function instead of relying on callers passing pre-cut input (they do
-    today — the maxflow epoch loop cuts each round's paths — but the
-    invariant belongs here). Path state is O(accepted paths x
-    depth), thousands of rows, so the pin costs milliseconds."""
+    function instead of relying on the caller's input: max_flow passes a
+    union of cut frames (each round's frontier and the last repair's
+    output), but the invariant belongs here. Path state is O(accepted
+    paths x depth), thousands of rows, so the pin costs milliseconds."""
     base = rounds.cut(df).withColumn("_rid", F.monotonically_increasing_id())
     seeds = base.where(F.size("ress") == 0).select("vertex", "verts", "ress")
     ex = (
@@ -332,7 +332,9 @@ def max_flow(
     edges, _, edge_parts = partitioning.sized_cache(g.edges, "u", rows=n_edges)
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     flows = _empty_flows(spark)
-    flow_edge_count = 0
+    # an upper bound on the flows table's rows, for its broadcast gates: a
+    # phase's union + groupBy never has more rows than its inputs
+    flow_rows_bound = 0
     metrics = RoundMetrics()
 
     def _seg(name, t0):
@@ -342,11 +344,9 @@ def max_flow(
     total = 0
     phase_cache: list[DataFrame] = []
 
-    # stored-path state carried across acceptance epochs:
-    # consolidated, repaired, materialized path tables per side, plus
-    # per-side row-count UPPER BOUNDS (repair only drops rows, so the
-    # accumulated visited counts stay valid) — the broadcast gates below
-    # need a bound, never an exact count (guide §3.1)
+    # stored-path state carried across acceptance epochs: repaired,
+    # materialized path tables per side plus their exact row counts, read
+    # off the jobs that materialized them
     stored: tuple[DataFrame, DataFrame, int, int] | None = None
 
     def _path_row_bytes() -> int:
@@ -369,7 +369,7 @@ def max_flow(
         # cached per phase: the flows join + residual filter run once; every
         # round's joins scan the in-memory arc cache
         _t = _time.time()
-        arcs = _residual_arcs(edges, flows, flow_edge_count, edge_parts).persist()
+        arcs = _residual_arcs(edges, flows, flow_rows_bound, edge_parts).persist()
         phase_cache.append(arcs)
         _seg("arcs_build", _t)
 
@@ -386,7 +386,6 @@ def max_flow(
             frontier_t = spark.createDataFrame([seed_rows[1]], _FRONTIER_SCHEMA)
             paths_s, paths_t = frontier_s, frontier_t
             n_s, n_t = 1, 1
-            v_s, v_t = 1, 1  # accumulated visited-count upper bounds
             _seg("seed", _t)
         else:
             # incremental restart: stored paths survive (repaired against
@@ -394,7 +393,7 @@ def max_flow(
             # of re-growing the whole BFS tree (the ff5 master
             # re-extension, ff5/ReduceFF.java:72-115)
             _t = _time.time()
-            paths_s, paths_t, v_s, v_t = stored
+            paths_s, paths_t, n_s, n_t = stored
             frontier_s, frontier_t = paths_s, paths_t
             # stored pairs meeting at a vertex were not all accepted last
             # epoch — re-collect them before spending any rounds
@@ -403,24 +402,18 @@ def max_flow(
                 F.col("verts").alias("o_verts"),
                 F.col("ress").alias("o_ress"),
             )
-            if partitioning.wide_rows_broadcastable(v_t, _path_row_bytes()):
+            if partitioning.wide_rows_broadcastable(n_t, _path_row_bytes()):
                 o = F.broadcast(o)
             meets_df = (
                 paths_s.join(o, "vertex")
                 .orderBy("vertex", F.xxhash64("verts"))
                 .limit(cfg.max_candidates)
             )
-            # three independent jobs over the SAME checkpointed path
-            # state — submit concurrently (guide §2.6)
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                f_ns = pool.submit(paths_s.count)
-                f_nt = pool.submit(paths_t.count)
-                f_meets = pool.submit(meets_df.collect)
-                n_s, n_t = f_ns.result(), f_nt.result()
-                meets = f_meets.result()
-            v_s, v_t = n_s, n_t  # exact post-repair counts tighten the bounds
-            candidates = [(r, True) for r in meets]
+            candidates = [(r, True) for r in meets_df.collect()]
             _seg("restart_meet", _t)
+        # every path is a frontier row at a phase's start; the rounds
+        # below accumulate these visited-count upper bounds
+        v_s, v_t = n_s, n_t
 
         # candidates pre-filled from the stored-pair meet: accept them now,
         # spend no extension rounds this epoch
@@ -435,8 +428,8 @@ def max_flow(
             extend_s = n_t == 0 or (n_s > 0 and n_s <= n_t)
             frontier = frontier_s if extend_s else frontier_t
             own = paths_s if extend_s else paths_t
-            # the meet collect below probes the blocks this count
-            # materialized: a cheap second job
+            # the meet collect below probes the blocks the counted job
+            # materialized
             new_f, n_new = rounds.cut_count(
                 _extend(
                     frontier,
@@ -550,21 +543,23 @@ def max_flow(
         _t = _time.time()
         deltas = acceptor.flow_deltas()
         delta_df = spark.createDataFrame(deltas, schema="u long, v long, f long")
-        # cut each phase (iteration GC, §4), counted in the same job
-        flows, flow_edge_count = rounds.cut_count(
+        # cut each phase (iteration GC, §4) and left for the next phase's
+        # arc build to materialize: the row bound needs no count
+        flows = rounds.cut(
             flows.unionAll(delta_df)
             .groupBy("u", "v")
             .agg(F.sum("f").alias("f"))
             .where(F.col("f") != 0)
         )
+        flow_rows_bound += len(deltas)
         _seg("flows_update", _t)
 
         _t = _time.time()
         # D9 incremental excess maintenance (the reference's flow-update +
         # saturation filter, ff1/Vertex.java:213-250): repair surviving
         # paths against this epoch's deltas and carry them into the next
-        # epoch instead of restarting the BFS (consolidated + checkpointed
-        # BEFORE the arc cache they were built from is dropped)
+        # epoch instead of restarting the BFS (cut and counted BEFORE the
+        # arc cache they were built from is dropped)
         delta_items = [(k, int(v)) for k, v in acceptor.delta.items() if v != 0]
         if len(delta_items) <= REPAIR_JOIN_THRESHOLD:
             rep_s = _repair_paths(paths_s, delta_items)
@@ -578,21 +573,12 @@ def max_flow(
             )
             rep_s = _repair_paths_join(paths_s, repair_df)
             rep_t = _repair_paths_join(paths_t, repair_df)
-        # ONE eager cut for both sides: tag + union + materialize, then
-        # split by tag over the cut partitions (coalesce bounds the
-        # union-accumulated partition count). No count is wanted, so an
-        # eager cut (2 jobs) beats a lazy cut plus count (3)
-        tagged = rounds.materialize(
-            rep_s.withColumn("_side", F.lit("s"))
-            .unionAll(rep_t.withColumn("_side", F.lit("t")))
-            .coalesce(n_shuffle)
-        )
-        stored = (
-            tagged.where(F.col("_side") == "s").drop("_side"),
-            tagged.where(F.col("_side") == "t").drop("_side"),
-            v_s,
-            v_t,
-        )
+        # one counted job per side; the exact post-repair counts are the
+        # next epoch's frontier sizes and visited bounds (coalesce bounds
+        # the join repair's partition count)
+        rep_s, c_s = rounds.cut_count(rep_s.coalesce(n_shuffle))
+        rep_t, c_t = rounds.cut_count(rep_t.coalesce(n_shuffle))
+        stored = (rep_s, rep_t, c_s, c_t)
         _seg("repair", _t)
 
         for df in phase_cache:
@@ -616,7 +602,7 @@ def max_flow(
     phase_cache.clear()
     if cfg.validate:
         _t = _time.time()
-        _validate(edges, flows, s_id, t_id, total, flow_edge_count, edge_parts)
+        _validate(edges, flows, s_id, t_id, total, flow_rows_bound, edge_parts)
         _seg("validate", _t)
     edges.unpersist()
     return MaxFlowResult(value=total, flows=flows, s_id=s_id, t_id=t_id, metrics=metrics)
@@ -634,10 +620,9 @@ def _validate(
     """The reference's fail-fast runtime invariants (SURVEY.md §5.2 /
     FIXTURES.md §6): capacity bounds (ff1/Edge.java:66-71) and per-vertex
     conservation with source/sink imbalance == reported value
-    (ff1/Vertex.java:161-162). ``n_flows`` (the caller's exact
-    flow_edge_count) gates an explicit broadcast of the checkpointed
-    flows side — statless, it would otherwise SMJ-exchange the edge
-    cache."""
+    (ff1/Vertex.java:161-162). ``n_flows`` (the caller's upper bound on
+    the flows rows) gates an explicit broadcast of the checkpointed flows
+    side — without statistics it would SMJ-exchange the edge cache."""
     fl = partitioning.state_join_side(flows, n_flows, edge_partitions, "u")
     bad_cap_df = (
         fl.join(edges, ["u", "v"])

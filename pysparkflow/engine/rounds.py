@@ -13,6 +13,12 @@ holds more than one round of joins. On Q12 at ``local[4]`` that costs no
 loop an extra job, and a round that reads its state twice stops
 recomputing it per read (bounded SSSP at 4 hops: 30 -> 15 jobs).
 
+A count costs no job of its own: ``cut_count`` reads it off the one job
+that materializes the cut, the way the reference reads its Hadoop
+counters off the round job that already ran
+(ff1/FordFulkerson.java:209-235). ``Dataset.count()`` on the cut would
+cost two jobs, an aggregation map stage and a result stage.
+
 A local checkpoint lives in executor storage: losing an executor fails
 the loop, where the reference's HDFS rounds would survive.
 """
@@ -21,7 +27,8 @@ from __future__ import annotations
 
 from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def cut(df: DataFrame) -> DataFrame:
@@ -30,16 +37,18 @@ def cut(df: DataFrame) -> DataFrame:
 
 
 def cut_count(df: DataFrame) -> tuple[DataFrame, int]:
-    """A converging loop's count: cut ``df`` and count it in the job that
-    materializes the cut."""
+    """A converging loop's count: cut ``df`` and count it in the one job
+    that materializes the cut — a no-op write observed with ``count(1)``.
+
+    The observed node scans the cut's ``LogicalRDD``, which has no
+    exchange, so it runs in a result stage, where Spark applies each
+    partition's accumulator update exactly once: the count stays exact
+    under task retries and speculative execution."""
     df = cut(df)
-    return df, df.count()
-
-
-def materialize(df: DataFrame) -> DataFrame:
-    """An eager cut, for state many later jobs read and nobody counts: two
-    jobs, where ``cut_count`` costs three."""
-    return df.localCheckpoint()
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    observed.write.format("noop").mode("overwrite").save()
+    return df, int(obs.get["n"])
 
 
 def unrolled(

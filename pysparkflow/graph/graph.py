@@ -125,10 +125,11 @@ class FlowGraph:
 
         The reference reserves ids 1 and 2 (ff1/Vertex.java:12-13); real-world
         tables may use any ids, so we derive collision-free ids from the graph's
-        id range (one tiny agg action). Returns (graph, s_id, t_id,
-        n_edges), where ``n_edges`` is the new graph's exact edge count —
-        max_flow and min_cut size and gate their caches with it instead of
-        running a count job.
+        id range (one tiny agg action) and the terminals' — a terminal absent
+        from the edges must not share an id with a super node. Returns
+        (graph, s_id, t_id, n_edges), where ``n_edges`` is the new graph's
+        exact edge count — max_flow and min_cut size and gate their caches
+        with it instead of running a count job.
         """
         sources = [int(x) for x in sources]
         sinks = [int(x) for x in sinks]
@@ -155,7 +156,7 @@ class FlowGraph:
             for i, t in enumerate(terms)
         ]
         row = self.edges.agg(*aggs).collect()[0]
-        hi = int(row["hi"] or 0)
+        hi = max([int(row["hi"] or 0)] + [abs(t) for t in terms])
         s_id, t_id = hi + 1, hi + 2
         n_base = int(row["n"])
         inf_of = {

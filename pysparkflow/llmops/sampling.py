@@ -91,7 +91,11 @@ def temperature_mixture(
     group→threshold table (|groups| rows) back onto a map-only filter —
     the corpus itself never shuffles. Groups larger than their allocation
     are rate-limited; groups small enough to fit entirely are kept whole
-    (rate capped at 1), matching temperature-sampling-with-ceiling."""
+    (rate capped at 1), matching temperature-sampling-with-ceiling.
+
+    The returned plan reads a cached per-group count table, so the caller
+    must call ``engine.cache.release_tracked()`` once the result is
+    consumed; otherwise the cache stays in Spark's CacheManager."""
     if alpha != 0.5:
         raise ValueError("alpha is fixed at 0.5 (sqrt) for oracle-exact replay")
     from pysparkflow.engine.cache import track

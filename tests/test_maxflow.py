@@ -47,20 +47,46 @@ def test_single_path(spark):
     _check(spark, edges, [10], [13])  # bottleneck 2
 
 
+# CLRS 26.1 topology (undirected interpretation), vertices 10..15
+CLRS_EDGES = [
+    (10, 11, 16),
+    (10, 12, 13),
+    (11, 12, 10),
+    (11, 13, 12),
+    (12, 13, 9),
+    (12, 14, 14),
+    (13, 14, 7),
+    (13, 15, 20),
+    (14, 15, 4),
+]
+
+
 def test_clrs_style_network(spark):
-    # CLRS 26.1 topology (undirected interpretation), vertices 10..15
-    edges = [
-        (10, 11, 16),
-        (10, 12, 13),
-        (11, 12, 10),
-        (11, 13, 12),
-        (12, 13, 9),
-        (12, 14, 14),
-        (13, 14, 7),
-        (13, 15, 20),
-        (14, 15, 4),
-    ]
-    _check(spark, edges, [10], [15])
+    _check(spark, CLRS_EDGES, [10], [15])
+
+
+def test_phase_loop_runs_no_count(spark, monkeypatch):
+    """max_flow reads every row count it needs off the jobs that
+    materialize its cuts, or bounds it on the driver: with
+    ``DataFrame.count`` raising, the value is unchanged."""
+    g = _build(spark, CLRS_EDGES)
+
+    def no_count(self):
+        raise AssertionError("max_flow called DataFrame.count")
+
+    monkeypatch.setattr(type(g.edges), "count", no_count)
+    res = max_flow(g, [10], [15], MaxFlowConfig(validate=False))
+    assert res.value == _oracle(CLRS_EDGES, [10], [15])
+
+
+def test_absent_terminal_shares_no_super_node_id(spark):
+    """A sink absent from the edges gets no flow: the super nodes are
+    numbered past every edge and terminal id, so the sink's super edge
+    cannot join the super-source to the super-sink."""
+    edges = [(1, 2, 1), (2, 3, 1)]
+    res = _check(spark, edges, [1], [4])
+    assert res.value == 0
+    assert {res.s_id, res.t_id}.isdisjoint({1, 2, 3, 4})
 
 
 def test_parallel_edges_summed(spark):
@@ -215,6 +241,9 @@ def test_graded_lineitem_value_vs_networkx(spark):
         MaxFlowConfig(meet_extra_rounds=0, validate=True),
     )
     assert res.value == expected
+    m = res.metrics
+    assert (m.phases, m.rounds) == (6, 10)
+    assert (m.candidates_seen, m.candidates_rejected) == (1926, 1851)
 
 
 def test_approx_early_stop_strictly_earlier_than_exact(spark):

@@ -84,6 +84,47 @@ def test_state_join_side_copartitions_above_gate(spark):
     assert "hashpartitioning(u" in plan
 
 
+def _job_ids(spark) -> set:
+    """Ids of the jobs without a job group in the status store, once the
+    listener bus has delivered every event so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+# frames to count: empty, one partition, three partitions out of a shuffle
+CUT_FRAMES = {
+    "empty": (lambda spark: spark.createDataFrame([], "id long"), 0, None),
+    "one_partition": (lambda spark: spark.range(0, 7, 1, 1), 7, 1),
+    "shuffled": (
+        lambda spark: spark.range(0, 1000, 1, 4).repartition(3, "id"), 1000, 3
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(CUT_FRAMES))
+def test_cut_count_is_exact_in_one_job(spark, shape):
+    """``cut_count`` returns the exact row count and a materialized cut,
+    and costs exactly one job more than the cut alone (the shuffled
+    frame's own shuffle stage runs when it is cut)."""
+    from pysparkflow.engine import rounds
+
+    make, rows, partitions = CUT_FRAMES[shape]
+    before = _job_ids(spark)
+    rounds.cut(make(spark))
+    cut_jobs = len(_job_ids(spark) - before)
+    before = _job_ids(spark)
+    df, n = rounds.cut_count(make(spark))
+    count_jobs = len(_job_ids(spark) - before)
+
+    assert n == rows
+    assert count_jobs == cut_jobs + 1
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    assert rdd.isCheckpointedAndMaterialized()
+    if partitions is not None:
+        assert rdd.getNumPartitions() == partitions
+
+
 # a 4-cycle with a chord plus a pendant vertex: every loop has work to do
 LOOP_EDGES = [(1, 2, 3), (2, 3, 2), (3, 4, 2), (4, 1, 3), (1, 3, 1), (4, 5, 4)]
 # hostile inputs: no edges at all; self-loops on both ends of the path
@@ -231,8 +272,9 @@ def _rows(df):
 
 
 # today's answers on the hostile inputs; source 1, sink 5. On the empty
-# table the super-source takes id 1 (graph.with_super_nodes numbers it past
-# the largest edge id), so min_cut's S side is that one vertex.
+# table the super-source takes id 6 (graph.with_super_nodes numbers it past
+# the largest edge or terminal id), so min_cut's S side is it and the
+# source its super edge reaches.
 HOSTILE = {
     ("empty", "bfs"): [[(1, 1)]],
     ("empty", "components"): [[]],
@@ -241,7 +283,7 @@ HOSTILE = {
     ("empty", "label_propagation"): [[]],
     ("empty", "kcore"): [[]],
     ("empty", "max_flow"): [[]],
-    ("empty", "min_cut"): [[], [(1,)]],
+    ("empty", "min_cut"): [[], [(1,), (6,)]],
     ("self_dup", "bfs"): [[(1, 1), (2, 2), (5, 3)]],
     ("self_dup", "components"): [[(1, 1), (2, 1), (5, 1)]],
     ("self_dup", "pagerank"): [[(1, 0.39375779), (2, 0.329288905), (5, 0.276953305)]],
