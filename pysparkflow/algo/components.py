@@ -13,9 +13,10 @@ Each iteration does two steps:
    bench graph, 2x faster end-to-end).
 
 Labels always name a vertex inside the same component, so the fixpoint is
-the component-minimum id for every vertex. Convergence check = one count
-per iteration, the same driver-loop shape as the reference's D11
-(ff1/FordFulkerson.java:240-244).
+the component-minimum id for every vertex. The convergence check counts
+the changed labels in the job that materializes the iteration's cut
+(engine/rounds.py ``cut_observe``), the same driver-loop shape as the
+reference's D11 (ff1/FordFulkerson.java:240-244).
 """
 
 from __future__ import annotations
@@ -65,6 +66,8 @@ def connected_components(graph: FlowGraph, rows_hint: int | None = None) -> Data
             partitioning.state_join_side(labels, n_arcs, arc_parts, "vertex"),
             arcs.b == labels.vertex,
         ).groupBy("a").agg(F.min("component").alias("nbr_min"))
+        # each row carries its round-start label as _old, so the cut's
+        # own job counts the changed labels
         stepped = labels.join(
             partitioning.state_join_side(neighbor_min, n_arcs, arc_parts, "a"),
             labels.vertex == neighbor_min.a,
@@ -74,39 +77,28 @@ def connected_components(graph: FlowGraph, rows_hint: int | None = None) -> Data
             F.least(
                 F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
             ).alias("component"),
+            F.col("component").alias("_old"),
         )
         # pointer doubling: component <- label(component)
         lookup = stepped.select(
             F.col("vertex").alias("lv"), F.col("component").alias("ll")
         )
-        doubled = rounds.cut(
+        doubled, stats = rounds.cut_observe(
             stepped.join(
                 partitioning.state_join_side(lookup, n_arcs, arc_parts, "lv"),
                 stepped.component == lookup.lv,
                 "left",
-            )
-            .select(
+            ).select(
                 "vertex",
                 F.least(
                     F.col("component"), F.coalesce(F.col("ll"), F.col("component"))
                 ).alias("component"),
-            )
+                "_old",
+            ),
+            changed=F.count_if(F.col("component") != F.col("_old")),
         )
-        # convergence check: it streams every doubled partition, so it
-        # materializes the cut. Both sides are cut |V|-row tables with no
-        # size statistics — gate the old-labels side so the fresh table is
-        # probed in place instead of a per-round sort-merge exchange of both
-        changed = (
-            doubled.alias("n")
-            .join(
-                partitioning.state_join_side(labels.alias("o"), n_arcs, arc_parts, "vertex"),
-                "vertex",
-            )
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = doubled
-        if changed == 0:
+        labels = doubled.select("vertex", "component")
+        if stats["changed"] == 0:
             break
     arcs.unpersist()
     return labels

@@ -25,28 +25,33 @@ file-per-round, D11).
 
 from __future__ import annotations
 
+from typing import Iterable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pysparkflow.engine import partitioning, rounds
 from pysparkflow.engine.cache import track
+from pysparkflow.graph.graph import vertex_coverage
 
 
 def _outdegree_arcs(
-    edges: DataFrame, src: str, dst: str, validate: bool, who: str
-) -> tuple[DataFrame, DataFrame, DataFrame, int, int]:
-    """(e, arcs, verts, n_edges, arc_parts) shared by both rankers. The
-    edge plan is cached ONCE at the data-sized partition count (see
+    edges: DataFrame, src: str, dst: str, who: str, seeds: Iterable[int] = ()
+) -> tuple[DataFrame, DataFrame, dict, int]:
+    """(arcs, verts, stats, arc_parts) shared by both rankers. The edge
+    plan is cached ONCE at the data-sized partition count (see
     engine/partitioning.py; the arc table's partition count is every
     round's map-side task count, measured 2x at local sf0.1) — the
     outdegree agg and the arc join both read the cache, and since e is
     hash-partitioned on u, neither needs a further exchange. ``arcs``
-    (edges with outdegree attached) and ``verts`` are tracked caches:
-    the returned lazy ranks plan still scans them, so the caller
-    releases them via engine/cache.release_tracked after consuming.
+    (edges with outdegree attached) is a tracked cache: the returned
+    lazy ranks plan still scans it, so the caller releases it via
+    engine/cache.release_tracked after consuming.
 
-    ``validate`` checks the outdegree >= 1 precondition: a sink vertex
-    would otherwise be silently dropped with its rank mass leaking."""
+    ``verts`` and ``stats`` come from graph.vertex_coverage over
+    ``arcs``, whose one job also materializes the arc cache. Raises when
+    a vertex has no out-arc: it would otherwise be silently dropped with
+    its rank mass leaking."""
     e, n_edges, arc_parts = partitioning.sized_cache(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), "u"
     )
@@ -57,36 +62,29 @@ def _outdegree_arcs(
     arcs = track(
         e.join(partitioning.state_join_side(deg, n_edges, arc_parts, "u"), "u")
     )
-    verts = track(arcs.select(F.col("u").alias("vertex")).distinct())
-    if validate:
-        n_sinks = (
-            e.select(F.col("v").alias("vertex"))
-            .distinct()
-            .join(verts, "vertex", "left_anti")
-            .count()
+    verts, stats = vertex_coverage(arcs, seeds)
+    e.unpersist()  # rounds scan arcs; the raw edge cache is done
+    if stats["no_out"]:
+        raise ValueError(
+            f"{who} requires outdegree >= 1 for every vertex; "
+            f"{stats['no_out']} vertices appear only as destinations "
+            f"(symmetrize the graph or add self-loops)"
         )
-        if n_sinks:
-            raise ValueError(
-                f"{who} requires outdegree >= 1 for every vertex; "
-                f"{n_sinks} vertices appear only as destinations "
-                f"(symmetrize the graph or add self-loops)"
-            )
-    return e, arcs, verts, n_edges, arc_parts
+    return arcs, verts, stats, arc_parts
 
 
 def _rank_rounds(
     arcs: DataFrame,
     verts: DataFrame,
+    stats: dict,
+    arc_parts: int,
     ranks: DataFrame,
     restart: Column,
     damping: float,
     iterations: int,
-    upper_rows: int,
-    arc_parts: int,
-    indegree_complete: bool,
 ) -> DataFrame:
     """The power-iteration rounds both rankers share; they differ only in
-    the ``restart`` term and the gate bound ``upper_rows`` on |V|."""
+    the starting ``ranks`` and the ``restart`` term."""
 
     def step(ranks: DataFrame) -> DataFrame:
         # state_join_side: broadcast the |V|-row rank table (or
@@ -97,7 +95,7 @@ def _rank_rounds(
             arcs.join(
                 partitioning.state_join_side(
                     ranks.withColumnRenamed("vertex", "u"),
-                    upper_rows,
+                    stats["n"],
                     arc_parts,
                     "u",
                 ),
@@ -106,7 +104,7 @@ def _rank_rounds(
             .groupBy(F.col("v").alias("vertex"))
             .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("mass"))
         )
-        if indegree_complete:
+        if not stats["no_in"]:
             # the aggregate's key set is already all of verts
             return contrib.select(
                 "vertex",
@@ -127,47 +125,38 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    validate: bool = True,
-    indegree_complete: bool = False,
 ) -> DataFrame:
     """Ranks after ``iterations`` synchronous rounds on the directed
     edge list. Every vertex must have outdegree >= 1 (true for any
     symmetrized undirected graph — pass both directions); dangling-mass
     redistribution is deliberately out of scope so the oracle replay
     stays one join + one aggregate per round. The precondition is
-    CHECKED (``validate=True``): a directed input with sink vertices
-    (outdegree 0) would otherwise be silently dropped from the output
-    with their rank mass leaking — misuse raises instead. One extra
-    vertex-scale anti-join job; disable for hot repeated calls on
-    known-symmetric graphs.
+    always checked: a vertex with outdegree 0 would otherwise be
+    silently dropped from the output with its rank mass leaking —
+    misuse raises ``ValueError`` instead.
 
-    ``indegree_complete=True`` asserts every vertex also has indegree
-    >= 1 (automatic on a symmetrized graph: each out-arc has a reverse
-    in-arc), letting each round skip the vertex-completion left join —
-    the aggregate already emits every vertex, so the join is an
-    identity costing one sort-merge stage per round (VERDICT r5 #5,
-    the iterative scheduler floor). Semantics are unchanged where the
-    precondition holds; leave False for general directed inputs.
+    The check reads graph.vertex_coverage, one job that also
+    materializes the arc cache. The same job tells whether every vertex
+    has an in-arc (always so on a symmetrized graph); if so, each round
+    skips the vertex-completion left join, because the aggregate
+    already emits every vertex. Otherwise the join keeps the vertices
+    without in-arcs at the restart term.
     An empty edge table gives an empty result. Lineage is cut per round
     (engine/rounds.py). Returns (vertex, rank)."""
-    e, arcs, verts, _, arc_parts = _outdegree_arcs(
-        edges, src, dst, validate, "pagerank"
-    )
-    # materializes arcs/verts from e's cache; an empty graph has no
-    # ranks to scale, so any positive n leaves its (empty) result alone
-    n = max(verts.count(), 1)
-    e.unpersist()  # rounds scan arcs; the raw edge cache is done
+    arcs, verts, stats, arc_parts = _outdegree_arcs(edges, src, dst, "pagerank")
+    # an empty graph has no ranks to scale, so any positive n leaves its
+    # (empty) result alone
+    n = max(stats["n"], 1)
     ranks = verts.select("vertex", (F.lit(1.0) / n).alias("rank"))
     return _rank_rounds(
         arcs,
         verts,
+        stats,
+        arc_parts,
         ranks,
         F.lit((1.0 - damping) / n),
         damping,
         iterations,
-        n,
-        arc_parts,
-        indegree_complete,
     )
 
 
@@ -178,8 +167,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    validate: bool = True,
-    indegree_complete: bool = False,
 ) -> DataFrame:
     """Personalized PageRank: the restart mass (1 - damping) lands on
     the ``sources`` set (uniformly) instead of on every vertex — ranks
@@ -188,40 +175,29 @@ def personalized_pagerank(
     as ``pagerank`` (one cached-arc join + one vertex-scale aggregate);
     the only change is the restart vector, so the unrolled-CTE oracle
     replay differs by one CASE expression. Requires outdegree >= 1
-    and every seed present in the graph — both CHECKED
-    (``validate=True``): a sink vertex or an absent seed would
-    otherwise silently leak restart mass and scale every score wrong.
-    ``indegree_complete=True``: same identity-join elision as
-    ``pagerank`` for symmetrized graphs (see there).
-    Returns (vertex, rank)."""
+    and every seed present in the graph — both always checked, off
+    ``pagerank``'s one coverage job: a sink vertex or an absent seed
+    would otherwise silently leak restart mass and scale every score
+    wrong, so either raises ``ValueError``. The vertex-completion join
+    is elided exactly as in ``pagerank``. Returns (vertex, rank)."""
     if not sources:
         raise ValueError("personalized_pagerank needs a non-empty source set")
-    _, arcs, verts, n_edges, arc_parts = _outdegree_arcs(
-        edges, src, dst, validate, "personalized_pagerank"
-    )
     seeds = [int(s) for s in sources]
-    if validate:
-        n_seeds = verts.where(F.col("vertex").isin(seeds)).count()
-        if n_seeds != len(set(seeds)):
-            raise ValueError(
-                f"{len(set(seeds)) - n_seeds} of {len(set(seeds))} seeds "
-                f"are not vertices of the graph — their restart mass "
-                f"would silently disappear"
-            )
+    arcs, verts, stats, arc_parts = _outdegree_arcs(
+        edges, src, dst, "personalized_pagerank", seeds
+    )
+    n_seeds = len(set(seeds))
+    if stats["seeds"] != n_seeds:
+        raise ValueError(
+            f"{n_seeds - stats['seeds']} of {n_seeds} seeds "
+            f"are not vertices of the graph — their restart mass "
+            f"would silently disappear"
+        )
     restart = F.when(
         F.col("vertex").isin(seeds), F.lit((1.0 - damping) / len(seeds))
     ).otherwise(F.lit(0.0))
     # start from the restart vector itself (the t=0 walk distribution)
     ranks = verts.select("vertex", restart.alias("rank"))
-    # |V| <= n_edges (every vertex has outdegree >= 1): a safe gate bound
     return _rank_rounds(
-        arcs,
-        verts,
-        ranks,
-        restart,
-        damping,
-        iterations,
-        n_edges,
-        arc_parts,
-        indegree_complete,
+        arcs, verts, stats, arc_parts, ranks, restart, damping, iterations
     )

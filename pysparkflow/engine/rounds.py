@@ -13,11 +13,13 @@ holds more than one round of joins. On Q12 at ``local[4]`` that costs no
 loop an extra job, and a round that reads its state twice stops
 recomputing it per read (bounded SSSP at 4 hops: 30 -> 15 jobs).
 
-A count costs no job of its own: ``cut_count`` reads it off the one job
-that materializes the cut, the way the reference reads its Hadoop
-counters off the round job that already ran
-(ff1/FordFulkerson.java:209-235). ``Dataset.count()`` on the cut would
-cost two jobs, an aggregation map stage and a result stage.
+A count costs no job of its own: ``cut_observe`` reads any named
+aggregates (a row count, a count of changed labels, a graph's coverage
+facts) off the one job that materializes the cut, the way the reference
+reads its Hadoop counters off the round job that already ran
+(ff1/FordFulkerson.java:209-235); ``cut_count`` is its row count.
+``Dataset.count()`` on the cut would cost two jobs, an aggregation map
+stage and a result stage.
 
 A local checkpoint lives in executor storage: losing an executor fails
 the loop, where the reference's HDFS rounds would survive.
@@ -27,7 +29,7 @@ from __future__ import annotations
 
 from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -36,19 +38,25 @@ def cut(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
-def cut_count(df: DataFrame) -> tuple[DataFrame, int]:
-    """A converging loop's count: cut ``df`` and count it in the one job
-    that materializes the cut — a no-op write observed with ``count(1)``.
+def cut_observe(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    """Cut ``df`` and compute the named aggregates ``aggs`` in the one job
+    that materializes the cut — a no-op write observed with them.
 
     The observed node scans the cut's ``LogicalRDD``, which has no
     exchange, so it runs in a result stage, where Spark applies each
-    partition's accumulator update exactly once: the count stays exact
-    under task retries and speculative execution."""
+    partition's accumulator update exactly once: the aggregates stay
+    exact under task retries and speculative execution."""
     df = cut(df)
     obs = Observation()
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    observed = df.observe(obs, *(agg.alias(name) for name, agg in aggs.items()))
     observed.write.format("noop").mode("overwrite").save()
-    return df, int(obs.get["n"])
+    return df, obs.get
+
+
+def cut_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """A converging loop's count: ``df`` cut, and its row count."""
+    df, stats = cut_observe(df, n=F.count(F.lit(1)))
+    return df, int(stats["n"])
 
 
 def unrolled(

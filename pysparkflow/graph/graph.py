@@ -27,6 +27,8 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pysparkflow.engine import rounds
+
 # Floor for super-source/sink edge capacity (the reference hardcodes
 # 10_000_000, ff2/FordFulkerson.java:235, ff3/FordFulkerson.java:119,
 # ff5/FordFulkerson.java:183-186 — fine for 2010-era graphs, but a silent
@@ -90,6 +92,32 @@ def degrees(edges: DataFrame) -> DataFrame:
         .groupBy("id")
         .agg(F.count("*").alias("degree"))
     )
+
+
+def vertex_coverage(
+    arcs: DataFrame, seeds: Iterable[int] = ()
+) -> tuple[DataFrame, dict]:
+    """Every vertex of the directed arc table ``arcs(u, v)`` as a
+    (vertex) frame over a cut, plus the facts the rankers branch on, read
+    off the job that materializes the cut (engine/rounds.py
+    ``cut_observe``): ``n`` vertices, ``no_out`` without an out-arc,
+    ``no_in`` without an in-arc, and how many distinct ``seeds`` are
+    vertices."""
+    seeds = sorted({int(s) for s in seeds})
+    flags = (
+        arcs.selectExpr("u AS vertex", "1 AS has_out", "0 AS has_in")
+        .unionAll(arcs.selectExpr("v AS vertex", "0 AS has_out", "1 AS has_in"))
+        .groupBy("vertex")
+        .agg(F.max("has_out").alias("has_out"), F.max("has_in").alias("has_in"))
+    )
+    verts, stats = rounds.cut_observe(
+        flags,
+        n=F.count(F.lit(1)),
+        no_out=F.count_if(F.col("has_out") == 0),
+        no_in=F.count_if(F.col("has_in") == 0),
+        seeds=F.count_if(F.col("vertex").isin(seeds)),
+    )
+    return verts.select("vertex"), stats
 
 
 @dataclass

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from pysparkflow.engine import partitioning
 from pysparkflow.engine.rounds import unrolled
+from pysparkflow.graph.graph import vertex_coverage
 
 
 def label_propagation(
@@ -38,25 +39,23 @@ def label_propagation(
     rounds: int = 4,
     src: str = "src",
     dst: str = "dst",
-    validate: bool = True,
-    indegree_complete: bool = False,
 ) -> DataFrame:
     """Labels after ``rounds`` synchronous mode-adoption rounds over the
     directed edge list (pass both directions for an undirected graph).
     Initial label = vertex id; a vertex with no inbound messages keeps
     its current label (so the output always covers every vertex).
-    The both-directions precondition is CHECKED (``validate=True``):
+    Every vertex must appear as a source, and this is always checked:
     destination-only vertices would otherwise be silently absent from
-    the output — misuse raises (same discipline as algo/pagerank.py).
-    Disable for hot repeated calls on known-symmetric graphs.
+    the output — misuse raises ``ValueError`` (same discipline as
+    algo/pagerank.py).
 
-    ``indegree_complete=True`` (valid whenever both directions were
-    passed: every vertex then receives its reverse-arc messages every
-    round) elides the per-round keep-old-label left join — the message
-    aggregate already covers every vertex, so the join is an identity
-    costing one extra stage per round (VERDICT r5 #5). Without it a round
-    reads ``labels`` twice, so lineage is cut every round
-    (engine/rounds.py). Returns (vertex, label)."""
+    The check reads graph.vertex_coverage, one job over the arc cache.
+    The same job tells whether every vertex has an in-arc (always so
+    when both directions were passed); if so, each round skips the
+    keep-old-label left join, because the message aggregate already
+    covers every vertex. Otherwise a round reads ``labels`` twice, so
+    lineage is cut every round (engine/rounds.py). Returns
+    (vertex, label)."""
     # tracked cache: the returned lazy labels plan still scans arcs, so
     # release is the caller's (engine/cache.release_tracked) after
     # consume. Cached ONCE at the data-sized partition count
@@ -66,20 +65,13 @@ def label_propagation(
     arcs, n_arcs, arc_parts = partitioning.sized_cache(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), "u"
     )
-    verts = arcs.select(F.col("u").alias("vertex")).distinct()
-    if validate:
-        n_dst_only = (
-            arcs.select(F.col("v").alias("vertex"))
-            .distinct()
-            .join(verts, "vertex", "left_anti")
-            .count()
+    verts, stats = vertex_coverage(arcs)
+    if stats["no_out"]:
+        raise ValueError(
+            f"label_propagation requires every vertex to appear as a "
+            f"source; {stats['no_out']} vertices appear only as destinations "
+            f"(pass both edge directions for an undirected graph)"
         )
-        if n_dst_only:
-            raise ValueError(
-                f"label_propagation requires every vertex to appear as a "
-                f"source; {n_dst_only} vertices appear only as destinations "
-                f"(pass both edge directions for an undirected graph)"
-            )
 
     def step(labels: DataFrame) -> DataFrame:
         # labels rows <= |V| <= n_arcs: broadcast-gated state side so the
@@ -101,7 +93,7 @@ def label_propagation(
             (-F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl")))["nl"])
             .alias("_new")
         )
-        if indegree_complete:
+        if not stats["no_in"]:
             return new.select("vertex", F.col("_new").alias("label"))
         # message-less vertices keep their label (no silent shrink on
         # graphs where some vertex receives nothing this round); the

@@ -2877,17 +2877,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = half.unionByName(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    out = pagerank(
-        sym,
-        iterations=_PR_ITERS,
-        damping=_PR_DAMPING,
-        # symmetric by construction (both directions unioned above), so
-        # the outdegree>=1 precondition holds — skip the validation job
-        validate=False,
-        # symmetric ⇒ indegree >= 1 everywhere: elide the per-round
-        # identity left join (VERDICT r5 #5 — scheduler-floor work)
-        indegree_complete=True,
-    )
+    out = pagerank(sym, iterations=_PR_ITERS, damping=_PR_DAMPING)
     return out.select("vertex", F.round("rank", 9).alias("rank"))
 
 
@@ -4134,12 +4124,7 @@ def q_label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = half.unionByName(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    # symmetric by construction (both directions unioned) — skip the
-    # validation job (graph/labelprop.py checks by default) and elide
-    # the per-round identity left join (VERDICT r5 #5)
-    return label_propagation(
-        sym, rounds=_LPA_ROUNDS, validate=False, indegree_complete=True
-    )
+    return label_propagation(sym, rounds=_LPA_ROUNDS)
 
 
 def _label_prop_oracle_sql(rounds: int = _LPA_ROUNDS) -> str:
@@ -4221,11 +4206,6 @@ def q_ppr_related(spark: SparkSession, sf_dir: str) -> DataFrame:
         sources=_PPR_SEEDS,
         iterations=_PR_ITERS,
         damping=_PR_DAMPING,
-        # symmetric by construction and the seeds are known lineitem
-        # fold residues — skip the two validation jobs in the bench path
-        validate=False,
-        # symmetric ⇒ per-round identity left join elided (VERDICT r5 #5)
-        indegree_complete=True,
     )
     # drop never-reached vertices so the graded rows are the reachable
     # neighborhood, mirrored by the oracle's rank > 0 filter

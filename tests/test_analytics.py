@@ -264,13 +264,24 @@ def _pagerank_reference(directed_edges, iterations, damping):
     return r
 
 
-def test_pagerank_matches_reference_power_iteration(spark):
+def _karate_arcs(shape):
+    """Both directions of every karate-club edge; the ``spoke`` shape adds
+    vertex 34 with one out-arc and no in-arc."""
     import networkx as nx
-
-    from pysparkflow.algo.pagerank import pagerank
 
     g = nx.karate_club_graph()
     edges = [(u, v) for u, v in g.edges()] + [(v, u) for u, v in g.edges()]
+    return edges + [(34, 0)] if shape == "spoke" else edges
+
+
+KARATE_SHAPES = ["symmetric", "spoke"]
+
+
+@pytest.mark.parametrize("shape", KARATE_SHAPES)
+def test_pagerank_matches_reference_power_iteration(spark, shape):
+    from pysparkflow.algo.pagerank import pagerank
+
+    edges = _karate_arcs(shape)
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r["vertex"]: r["rank"]
@@ -303,13 +314,11 @@ def _ppr_reference(directed_edges, seeds, iterations, damping):
     return r
 
 
-def test_personalized_pagerank_matches_reference(spark):
-    import networkx as nx
-
+@pytest.mark.parametrize("shape", KARATE_SHAPES)
+def test_personalized_pagerank_matches_reference(spark, shape):
     from pysparkflow.algo.pagerank import personalized_pagerank
 
-    g = nx.karate_club_graph()
-    edges = [(u, v) for u, v in g.edges()] + [(v, u) for u, v in g.edges()]
+    edges = _karate_arcs(shape)
     df = spark.createDataFrame(edges, "src long, dst long")
     seeds = [0, 33]
     got = {
@@ -326,6 +335,31 @@ def test_personalized_pagerank_matches_reference(spark):
     # adjacent to a seed outrank the far side of the graph
     non_seed_max = max(r for v, r in got.items() if v not in seeds)
     assert min(got[0], got[33]) > non_seed_max
+
+
+@pytest.mark.parametrize(
+    "ranker", ["pagerank", "personalized_pagerank", "label_propagation"]
+)
+@pytest.mark.parametrize("shape", KARATE_SHAPES)
+def test_ranker_completion_join_follows_the_data(spark, shape, ranker):
+    """A default call plans the per-round left-outer completion join
+    exactly when some vertex has no in-arc: never on the symmetric
+    graph, in the last (uncut) round on the spoke graph."""
+    from pysparkflow.algo.pagerank import pagerank, personalized_pagerank
+    from pysparkflow.engine.cache import release_tracked
+    from pysparkflow.graph.labelprop import label_propagation
+
+    df = spark.createDataFrame(_karate_arcs(shape), "src long, dst long")
+    out = {
+        "pagerank": lambda: pagerank(df, iterations=3),
+        "personalized_pagerank": lambda: personalized_pagerank(
+            df, sources=[0, 33], iterations=3
+        ),
+        "label_propagation": lambda: label_propagation(df, rounds=3),
+    }[ranker]()
+    plan = out._jdf.queryExecution().analyzed().treeString()
+    release_tracked()
+    assert plan.count("Join LeftOuter") == (1 if shape == "spoke" else 0), plan
 
 
 def test_personalized_pagerank_rejects_empty_seeds(spark):

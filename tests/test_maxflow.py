@@ -79,14 +79,36 @@ def test_phase_loop_runs_no_count(spark, monkeypatch):
     assert res.value == _oracle(CLRS_EDGES, [10], [15])
 
 
-def test_absent_terminal_shares_no_super_node_id(spark):
-    """A sink absent from the edges gets no flow: the super nodes are
-    numbered past every edge and terminal id, so the sink's super edge
+# (edges, sources, sinks) where no flow can pass: a terminal absent from
+# the edges, or a sink the source cannot reach
+NO_FLOW = {
+    "absent_sink": ([(1, 2, 1), (2, 3, 1)], [1], [4]),
+    "unreachable_sink": ([(1, 2, 1), (3, 4, 1)], [1], [4]),
+    "absent_source": ([(1, 2, 1)], [9], [2]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(NO_FLOW))
+def test_absent_terminal_shares_no_super_node_id(spark, case):
+    """An absent or unreachable terminal gets no flow: the super nodes are
+    numbered past every edge and terminal id, so a terminal's super edge
     cannot join the super-source to the super-sink."""
-    edges = [(1, 2, 1), (2, 3, 1)]
-    res = _check(spark, edges, [1], [4])
+    edges, sources, sinks = NO_FLOW[case]
+    res = _check(spark, edges, sources, sinks)
     assert res.value == 0
-    assert {res.s_id, res.t_id}.isdisjoint({1, 2, 3, 4})
+    ids = {x for u, v, _ in edges for x in (u, v)} | set(sources) | set(sinks)
+    assert {res.s_id, res.t_id}.isdisjoint(ids)
+
+
+def test_capacity_sum_past_long_range_raises(spark):
+    """Four 2^62 edges 1 -> {2, 3} -> 4: the source's incident capacity
+    sums to 2^63, one past the long range. The session's ANSI arithmetic
+    raises instead of returning a wrapped value."""
+    from pyspark.errors import ArithmeticException
+
+    edges = [(1, 2, 2**62), (1, 3, 2**62), (2, 4, 2**62), (3, 4, 2**62)]
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        max_flow(_build(spark, edges), [1], [4])
 
 
 def test_parallel_edges_summed(spark):

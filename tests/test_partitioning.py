@@ -104,25 +104,45 @@ CUT_FRAMES = {
 
 @pytest.mark.parametrize("shape", sorted(CUT_FRAMES))
 def test_cut_count_is_exact_in_one_job(spark, shape):
-    """``cut_count`` returns the exact row count and a materialized cut,
-    and costs exactly one job more than the cut alone (the shuffled
-    frame's own shuffle stage runs when it is cut)."""
+    """``cut_count``, and ``cut_observe`` with several aggregates, return
+    exact values and a materialized cut, and cost exactly one job more
+    than the cut alone (the shuffled frame's own shuffle stage runs when
+    it is cut)."""
+    from pyspark.sql import functions as F
+
     from pysparkflow.engine import rounds
 
     make, rows, partitions = CUT_FRAMES[shape]
+    ids = [r["id"] for r in make(spark).collect()]
     before = _job_ids(spark)
     rounds.cut(make(spark))
     cut_jobs = len(_job_ids(spark) - before)
     before = _job_ids(spark)
     df, n = rounds.cut_count(make(spark))
     count_jobs = len(_job_ids(spark) - before)
+    before = _job_ids(spark)
+    observed, stats = rounds.cut_observe(
+        make(spark),
+        n=F.count(F.lit(1)),
+        total=F.sum("id"),
+        top=F.max("id"),
+        odd=F.count_if(F.col("id") % 2 == 1),
+    )
+    observe_jobs = len(_job_ids(spark) - before)
 
-    assert n == rows
-    assert count_jobs == cut_jobs + 1
-    rdd = df._jdf.queryExecution().analyzed().rdd()
-    assert rdd.isCheckpointedAndMaterialized()
-    if partitions is not None:
-        assert rdd.getNumPartitions() == partitions
+    assert n == rows == len(ids)
+    assert stats == {
+        "n": len(ids),
+        "total": sum(ids) if ids else None,
+        "top": max(ids, default=None),
+        "odd": sum(i % 2 for i in ids),
+    }
+    assert count_jobs == observe_jobs == cut_jobs + 1
+    for frame in (df, observed):
+        rdd = frame._jdf.queryExecution().analyzed().rdd()
+        assert rdd.isCheckpointedAndMaterialized()
+        if partitions is not None:
+            assert rdd.getNumPartitions() == partitions
 
 
 # a 4-cycle with a chord plus a pendant vertex: every loop has work to do

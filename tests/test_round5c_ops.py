@@ -100,6 +100,15 @@ def test_label_propagation_rejects_directed_input(spark):
         label_propagation(df, rounds=2).collect()
 
 
+def test_label_propagation_source_only_vertex_keeps_its_label(spark):
+    # a directed ring 1 -> 2 -> 3 -> 1 plus the spoke 9 -> 1: vertex 9
+    # receives no message, so it keeps its own label every round
+    df = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (9, 1)], "src long, dst long")
+    got = {r["vertex"]: r["label"] for r in label_propagation(df, rounds=3).collect()}
+    assert set(got) == {1, 2, 3, 9}
+    assert got[9] == 9
+
+
 def test_label_propagation_covers_all_vertices(spark):
     # symmetric path graph: output must label every vertex each round
     path = [(1, 2), (2, 3), (3, 4)]

@@ -84,12 +84,7 @@ def main() -> int:
 
     # --- pagerank: uniform fixed point on the d-regular hypercube ----------
     t0 = time.time()
-    pr = pagerank(
-        hypercube_sym(spark, n_bits),
-        iterations=5,
-        validate=False,
-        indegree_complete=True,
-    )
+    pr = pagerank(hypercube_sym(spark, n_bits), iterations=5)
     bad = pr.where(F.abs(F.col("rank") - 1.0 / n) > 1e-12).count()
     total = pr.count()
     out["pagerank"] = {
@@ -101,12 +96,7 @@ def main() -> int:
 
     # --- label propagation: clique minima ----------------------------------
     t0 = time.time()
-    lp = label_propagation(
-        clique_union(spark, n_cliques),
-        rounds=3,
-        validate=False,
-        indegree_complete=True,
-    )
+    lp = label_propagation(clique_union(spark, n_cliques), rounds=3)
     wrong = lp.where(
         F.col("label") != F.col("vertex") - F.col("vertex") % CLIQUE
     ).count()
