@@ -20,6 +20,8 @@ with SPARK_GRAFT_BENCH_OUT=bench_queries_r{N}_cand{i}.json), then
 — per-query MEDIANS decide, the probe bracket only breaks ties, and
 the chosen snapshot carries `chosen_by` + every candidate's score
 (VERDICT r10 #4; the rule's r10 precedent is recorded in SCALING.md).
+The candidate side files are not committed (.gitignore): the chosen
+snapshot's `candidate_scores` is their record.
 
 Expected stderr noise: `WindowExec: No Partition Defined for Window
 operation` prints a handful of times per run. ALL FOUR sources are
@@ -214,11 +216,10 @@ def _regression_check(
     import re
 
     here = os.path.dirname(os.path.abspath(__file__))
-    # adjudicated round snapshots ONLY (bench_queries_r8.json) — the
-    # per-candidate side files (bench_queries_r8_cand2.json, committed
-    # for variance analysis per VERDICT r7 #7) may contain exactly the
-    # drift spikes adjudication excluded, so they must never become the
-    # regression baseline
+    # adjudicated round snapshots ONLY (bench_queries_r8.json) — a
+    # per-candidate side file (bench_queries_r8_cand2.json) left in the
+    # checkout may contain exactly the drift spikes adjudication
+    # excluded, so it must never become the regression baseline
     snaps = sorted(
         (
             p
@@ -407,10 +408,9 @@ def main() -> None:
     host_flag, host_ratio = _host_flag(cal_before, cal_after)
     # full per-query map → committed side file (too big for the driver's
     # ~2KB stdout tail window; see module docstring)
-    # VERDICT r7 #7: closing-bench candidates must ALL be committed, not
-    # just the winner — SPARK_GRAFT_BENCH_OUT names this run's side file
-    # (e.g. bench_queries_r8_cand1.json) so per-query variance across
-    # same-code candidates is machine-readable via tools/bench_delta.py
+    # SPARK_GRAFT_BENCH_OUT names this run's side file (e.g.
+    # bench_queries_r8_cand1.json) so per-query variance across same-code
+    # candidates is machine-readable via tools/bench_delta.py
     side_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
         os.environ.get("SPARK_GRAFT_BENCH_OUT", "bench_queries_latest.json"),

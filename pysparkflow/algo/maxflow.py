@@ -63,7 +63,6 @@ from __future__ import annotations
 
 import logging
 import time as _time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Iterable
 
@@ -635,16 +634,12 @@ def _validate(
         .agg(F.sum("out").alias("net"))
         .where(F.col("net") != 0)
     )
-    # the two invariant checks are independent jobs over the small flows
-    # table — submit concurrently (guide §2.6)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cap = pool.submit(bad_cap_df.count)
-        f_net = pool.submit(net.collect)
-        bad_cap = f_cap.result()
-        net_rows = f_net.result()
+    # run on the calling thread: jobs sent from a plain worker thread lose
+    # the caller's job description under PySpark's pinned-thread mode
+    bad_cap = bad_cap_df.count()
     if bad_cap:
         raise RuntimeError(f"capacity violated on {bad_cap} edges (ff1/Edge.java:66-71)")
-    rows = {int(r["id"]): int(r["net"]) for r in net_rows}
+    rows = {int(r["id"]): int(r["net"]) for r in net.collect()}
     expected = {} if total == 0 else {s_id: total, t_id: -total}
     if rows != expected:
         raise RuntimeError(

@@ -240,20 +240,6 @@ def _affine_params(num_hashes: int, seed: int) -> tuple[list[int], list[int]]:
     return a, b
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_n: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash signatures as one column per hash (id, m0..m{k-1})."""
-    return _minhash_sig_from_hashed(
-        _shingle_pairs_hashed(df, id_col, text_col, shingle_n), num_hashes, seed
-    )
-
-
 def _minhash_band_rows(sig: DataFrame, bands: int, r: int) -> DataFrame:
     """(id, band, bucket) rows from a signature table: bucket is the
     comma-joined run of the band's r minhashes — the only join key that

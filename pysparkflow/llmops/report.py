@@ -133,9 +133,9 @@ def mixture_drift(
       snapshot, all-null quantiles coalesced to 0, gets a finite score
       instead of killing the job). Like PSI it is 0 iff the NORMALIZED
       profile is unchanged; because it normalizes, a near-uniform
-      level move of all three quantiles cancels (measured: the
-      saturated-score planted corpus in tools/r10_scale.py moves every
-      quantile by ~1e-3 and q_shift by ~1e-8). Its magnitude is not
+      level move of all three quantiles cancels (measured: a
+      saturated-score planted corpus moves every quantile by ~1e-3
+      and q_shift by ~1e-8; SCALING.md r10). Its magnitude is not
       calibrated to PSI's 0.1/0.25 read — compare across sources
       within one diff.
     * ``q_w1`` — LEVEL shift: the 3-point quantile approximation of

@@ -803,10 +803,11 @@ def centroid_affinity(
     a 5e-7 rounding boundary could flip between engines; the guarantee
     is the same probabilistic rounded-number contract as the repo's
     other 6-dp columns, NOT exactness, and rank-gates built on this
-    column must replay the published rounding, as tools/r10b_scale.py
-    does). The cosine itself is functions/vector.cosine_similarity
-    (try_divide + coalesce — a zero centroid, e.g. a group of
-    exactly-opposed vectors, gets affinity 0.0, not a job kill)."""
+    column must replay the published rounding; SCALING.md r10 records
+    the one-row boundary shift that replaying it caught). The cosine
+    itself is functions/vector.cosine_similarity (try_divide + coalesce
+    — a zero centroid, e.g. a group of exactly-opposed vectors, gets
+    affinity 0.0, not a job kill)."""
     cent = (
         emb.select(
             F.col(group_col).alias("grp"),
