@@ -6,8 +6,11 @@ entry(spark)    — flagship: multi-source/multi-sink max-flow (the reference's
                   flow assignment.
 queries()       — every implemented operator from SURVEY.md §2 + the
                   training-data-pipeline extensions (pysparkflow.relational.registry).
-oracle_sql()    — matching ANSI-SQL oracles for DuckDB; iterative/sketch
-                  entries are registered without oracle (rows-only check).
+oracle_sql()    — matching ANSI-SQL equality oracles for DuckDB. Every
+                  entry has an oracle: the 4 sketch and sampled entries
+                  have a banded tolerance oracle instead (registry
+                  QuerySpec, run by tools/oracle_check.py) and are absent
+                  here; the 6 pinned ones hold at sf0.01 only.
 """
 
 from __future__ import annotations

@@ -44,7 +44,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from pysparkflow.relational.registry import QUERIES
+from pysparkflow.engine.cache import clear_shared, release_tracked
+from pysparkflow.relational.registry import QUERIES, SPECS
 from pysparkflow.session import get_spark
 
 # every registry query is benchmarked — a perf regression in any graded
@@ -57,7 +58,7 @@ BENCH_QUERIES = list(QUERIES)
 # comparable — and the rest of the list keeps its registry order, so
 # max_flow still runs before the other graph entries (the r2–r5
 # cost-attribution: the flagship pays the shared graph build, bfs/
-# min_cut/approx reuse it). The flagship additionally gets an
+# components/min_cut reuse it). The flagship additionally gets an
 # unconditional, memo-cleared second sample below.
 _WARMUP_FRONT = [
     "scd2_temporal_join",
@@ -76,36 +77,23 @@ _WARMUP_FRONT = [
 for _q in _WARMUP_FRONT:
     BENCH_QUERIES.remove(_q)
 BENCH_QUERIES = _WARMUP_FRONT + BENCH_QUERIES
-# max_flow_approx runs BEFORE max_flow (round 9): both flagships are
-# memo-cleared min-of-2 and each pays its own full graph build, so the
-# swap changes neither headline — but the LAST flagship sampled is the
-# one whose memo min_cut (the dual of the SAME exact run, registry
-# q_min_cut) later reads. With approx last, every candidate's min_cut
-# first sample paid a full ~13s exact max_flow re-run (approx clears
-# _MAXFLOW_CACHE and never repopulates it — it runs a non-memoized
-# config) and the committed number depended on the tripwire firing;
-# with max_flow last the exact memo is warm by construction (observed
-# 3/3 r9 candidates: min_cut first sample 13.8-15.9s, adjudicated
-# re-sample 3.5-4.0s — systematic, not host drift).
+# max_flow_approx runs BEFORE max_flow (round 9), so every later graph
+# reader finds the graph and flow memos of the exact run — the memo state
+# its committed baselines were measured under. In bench order the first
+# reader of every session memo must be its cold builder (the registry's
+# QuerySpec.cold), which clears the memo before each of its samples;
+# tests/test_bench_tripwire.py pins that rule. It was learned in r9: with
+# approx last (it then cleared the flow memo too), min_cut's first sample
+# paid a full ~13s exact max_flow re-run (3/3 candidates: 13.8-15.9s
+# first sample, 3.5-4.0s re-sampled).
 BENCH_QUERIES.remove("max_flow_approx")
 BENCH_QUERIES.insert(BENCH_QUERIES.index("max_flow"), "max_flow_approx")
 # queries re-sampled (min-of-2) regardless of the <3s rule: flagship
 # artifacts must not hinge on one cold/noisy sample. max_flow_approx
 # joined in round 7 (VERDICT r6 #5: its r6 artifact number was a
 # single sample on the drifted segment of the run, reading 1.4x its
-# quiet-host cost) — both iterative headlines get the memo-cleared
-# min-of-2 treatment
+# quiet-host cost)
 MIN_OF_2_ALWAYS = {"max_flow", "max_flow_approx"}
-# entries whose first sample cold-BUILDS a session memo that later
-# entries consume: their committed baselines are cold-build numbers, so
-# any re-sample must clear that memo first or it records the warm dict
-# lookup (r10 cand1: dedup_minhash_lsh snapshot 3.69s, first 6.02s on a
-# degraded host, warm resample 0.03s KEPT — indefensible in the other
-# direction from the r9 min_cut bug). The _GRAPH_CACHE rule is the
-# opposite (warm re-sample) because THOSE entries' first samples and
-# baselines are warm; the principle is the same: re-sample under the
-# memo state the baseline was measured under.
-PAIR_MEMO_BUILDERS = {"dedup_minhash_lsh"}
 
 # quiet-host calibration reference (round-5 SCALING.md recertification
 # runs): ratios of this run's probes against these pin whether the host
@@ -246,6 +234,24 @@ def _regression_check(
     return sorted(out, key=lambda t: t[2] - t[1], reverse=True)
 
 
+def _sample(spark, sf_dir: str, name: str) -> float:
+    """One timed sample of ``name``: build plus a noop write (full compute,
+    no collect/write overhead), then release the per-query caches. A cold
+    spec's memos are cleared first, so its sample pays for building them
+    (the flagship's number is never a memo lookup); warm readers find
+    them built."""
+    spec = SPECS[name]
+    if spec.cold:
+        clear_shared(*spec.memos)
+    t0 = time.time()
+    QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    elapsed = round(time.time() - t0, 3)
+    # operator-internal caches (shingle index, normalized vectors) are
+    # per-query scratch; release so 150+ queries don't stack dead cache
+    release_tracked()
+    return elapsed
+
+
 def _adjudicate_flags(
     spark,
     sf_dir: str,
@@ -253,48 +259,22 @@ def _adjudicate_flags(
     flags: list[tuple[str, float, float]],
     run_query=None,
 ) -> list[tuple[str, float, float, float]]:
-    """Re-sample every tripwire flag in-run (noop sink, full recompute,
-    memo discipline IDENTICAL to the main loop's) and commit
-    min(first, resample) into ``timings``. Returns
+    """Re-sample every tripwire flag in-run (``_sample``, as in the main
+    loop) and commit min(first, resample) into ``timings``. Returns
     (name, snapshot, first, resample) per flag. ``run_query`` overrides
     the query runner for tests.
 
-    Memo discipline (ADVICE r8): the flagship entries clear the
-    graph/flow memos before the re-sample, exactly as before their main
-    samples; _GRAPH_CACHE-backed entries (min_cut, sssp_bounded,
-    triangle_count, ...) re-sample WARM — deliberately, not as an
-    oversight. Their main-loop first samples AND every snapshot
-    baseline were measured against the same warm graph memo (graph
-    build is timed only inside max_flow, per the min_cut discipline at
-    the main loop), so a warm re-sample is the only apples-to-apples
-    comparison; clearing here would charge the re-sample a graph build
-    + max_flow that neither the first sample nor the baseline paid and
-    commit an incomparable min(). A genuine ALGORITHM regression
-    survives a warm re-sample unchanged, and a genuine GRAPH-BUILD
-    regression is caught by the memo-cleared flagship samples.
-
-    The inverse rule for PAIR_MEMO_BUILDERS (r10): dedup_minhash_lsh's
-    first sample and every baseline are COLD pair-memo builds, so its
-    re-sample clears the pair memo — a warm re-sample is the dict
-    lookup, not the operator."""
-    from pysparkflow.engine.cache import release_tracked
-    from pysparkflow.relational.registry import (
-        clear_flow_memos,
-        clear_pair_memos,
-    )
-
+    Every re-sample runs under the memo state of the entry's first
+    sample and baselines (``_sample``): a cold builder re-pays its memo
+    build, and a warm reader (min_cut, bfs_distances, the pair
+    consumers, ...) re-samples warm — clearing would charge it a build
+    that neither its first sample nor its baseline paid. A genuine
+    algorithm regression survives a warm re-sample, and a genuine
+    memo-build regression shows in the cold builders' samples."""
     adjudicated: list[tuple[str, float, float, float]] = []
     for name, old, first in flags:
         if run_query is None:
-            if name in MIN_OF_2_ALWAYS:
-                clear_flow_memos()
-            if name in PAIR_MEMO_BUILDERS:
-                clear_pair_memos()
-            t0 = time.time()
-            df = QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            resample = round(time.time() - t0, 3)
-            release_tracked()
+            resample = _sample(spark, sf_dir, name)
         else:
             resample = run_query(name)
         timings[name] = min(first, resample)
@@ -333,27 +313,10 @@ def main() -> None:
     for t in TABLES:
         load_table(spark, sf_dir, t).count()
     _warm_streaming(spark)
-    from pysparkflow.engine.cache import release_tracked
-
-    from pysparkflow.relational.registry import clear_flow_memos
 
     timings: dict[str, float] = {}
     for name in BENCH_QUERIES:
-        fn = QUERIES[name]
-        # the flagship's samples are SELF-CONTAINED: drop the session
-        # graph/flow memos so each timed run pays graph build + the full
-        # iterative computation (other graph entries sharing the memo is
-        # the documented min_cut discipline; the headline number is not
-        # allowed to be a memo lookup)
-        if name in MIN_OF_2_ALWAYS:
-            clear_flow_memos()
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.time() - t0, 3)
-        # operator-internal caches (shingle index, normalized vectors) are
-        # per-query scratch; release so 90+ queries don't stack dead cache
-        release_tracked()
+        timings[name] = _sample(spark, sf_dir, name)
         # the bench VM's CPU drifts up to ~5x mid-run (see the
         # host_calibration probes); a single sample of a sub-3s query can
         # read as a fake multi-x regression. Repeat cheap queries once and
@@ -370,28 +333,15 @@ def main() -> None:
             or name in MIN_OF_2_ALWAYS
             or name in _WARMUP_FRONT
         ):
-            if name in MIN_OF_2_ALWAYS:
-                clear_flow_memos()
-            # memo BUILDERS re-sample cold (see PAIR_MEMO_BUILDERS):
-            # guards the day a fast host pushes the cold build under
-            # the 3s gate and min-of-2 would otherwise record the
-            # warm dict lookup
-            if name in PAIR_MEMO_BUILDERS:
-                from pysparkflow.relational.registry import clear_pair_memos
-
-                clear_pair_memos()
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            timings[name] = min(timings[name], round(time.time() - t0, 3))
-            release_tracked()
+            timings[name] = min(timings[name], _sample(spark, sf_dir, name))
         print(f"[bench] {name}: {timings[name]:.2f}s", file=sys.stderr)
     # self-adjudicating tripwire (VERDICT r7 #2): a query tripping the
-    # >1.5x flag is immediately re-sampled (memo-cleared, full recompute)
-    # within the SAME run — a host-drift spike caught once must not
-    # become the committed number, and a flag that SURVIVES its own
-    # re-sample is evidence of code, not host. Runs before the closing
-    # calibration probe so the probe brackets every timed sample.
+    # >1.5x flag is immediately re-sampled (full recompute, same memo
+    # state as its first sample) within the SAME run — a host-drift
+    # spike caught once must not become the committed number, and a flag
+    # that SURVIVES its own re-sample is evidence of code, not host. Runs
+    # before the closing calibration probe so the probe brackets every
+    # timed sample.
     adjudicated = _adjudicate_flags(
         spark, sf_dir, timings, _regression_check(timings, sf_val)
     )
@@ -464,8 +414,8 @@ def main() -> None:
     # snapshot AND >1s absolute (sub-second entries whipsaw on host
     # noise). Since round 8 the timings here are POST-adjudication
     # (min over the first sample and the in-run re-sample), so a flag
-    # that still prints survived its own memo-cleared re-sample — code,
-    # not a one-off host spike.
+    # that still prints survived its own re-sample — code, not a one-off
+    # host spike.
     regressed = _regression_check(timings, sf_val)
     for name, old, new in regressed:
         print(

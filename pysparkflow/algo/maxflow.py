@@ -362,6 +362,26 @@ def max_flow(
         cluster scale (VERDICT r13 #1)."""
         return 24 + 16 * (metrics.rounds + 1)
 
+    def _meet(near: DataFrame, far: DataFrame, n_far: int, limit: int) -> list:
+        """Collect up to ``limit`` path pairs meeting at a vertex, in a
+        deterministic order: ``near``'s rows joined on ``vertex`` with the
+        far side's path table (``o_verts``/``o_ress``). ``n_far`` bounds
+        the far side's rows; they carry path arrays, so the broadcast
+        gate is byte-aware — ``near`` is probed in place when it passes."""
+        o = far.select(
+            F.col("vertex"),
+            F.col("verts").alias("o_verts"),
+            F.col("ress").alias("o_ress"),
+        )
+        if partitioning.wide_rows_broadcastable(n_far, _path_row_bytes()):
+            o = F.broadcast(o)
+        return (
+            near.join(o, "vertex")
+            .orderBy("vertex", F.xxhash64("verts"))
+            .limit(limit)
+            .collect()
+        )
+
     _seg("init", _t_init)
     while True:
         metrics.phases += 1
@@ -396,19 +416,9 @@ def max_flow(
             frontier_s, frontier_t = paths_s, paths_t
             # stored pairs meeting at a vertex were not all accepted last
             # epoch — re-collect them before spending any rounds
-            o = paths_t.select(
-                F.col("vertex"),
-                F.col("verts").alias("o_verts"),
-                F.col("ress").alias("o_ress"),
-            )
-            if partitioning.wide_rows_broadcastable(n_t, _path_row_bytes()):
-                o = F.broadcast(o)
-            meets_df = (
-                paths_s.join(o, "vertex")
-                .orderBy("vertex", F.xxhash64("verts"))
-                .limit(cfg.max_candidates)
-            )
-            candidates = [(r, True) for r in meets_df.collect()]
+            candidates = [
+                (r, True) for r in _meet(paths_s, paths_t, n_t, cfg.max_candidates)
+            ]
             _seg("restart_meet", _t)
         # every path is a frontier row at a phase's start; the rounds
         # below accumulate these visited-count upper bounds
@@ -444,25 +454,13 @@ def max_flow(
                     arc_partitions=edge_parts,
                 )
             )
-            other = paths_t if extend_s else paths_s
-            o = other.select(
-                F.col("vertex"),
-                F.col("verts").alias("o_verts"),
-                F.col("ress").alias("o_ress"),
+            # the opposite side's path table is bounded by its visited count
+            meets = _meet(
+                new_f,
+                paths_t if extend_s else paths_s,
+                v_t if extend_s else v_s,
+                cfg.max_candidates - len(candidates),
             )
-            if partitioning.wide_rows_broadcastable(
-                v_t if extend_s else v_s, _path_row_bytes()
-            ):
-                # the opposite side's path table is bounded by its visited
-                # count; its rows carry path arrays, so the gate is
-                # byte-aware — probe the fresh frontier in place for the meet
-                o = F.broadcast(o)
-            meets_df = (
-                new_f.join(o, "vertex")
-                .orderBy("vertex", F.xxhash64("verts"))
-                .limit(cfg.max_candidates - len(candidates))
-            )
-            meets = meets_df.collect()
             if extend_s:
                 frontier_s, n_s = new_f, n_new
             else:

@@ -37,6 +37,14 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    DataType,
+    MapType,
+    StringType,
+    StructType,
+)
 
 from pysparkflow.engine.cache import track
 
@@ -122,6 +130,12 @@ def stream_state_partitions(
     return max(4, min(sess, n // rows_per_partition + 1))
 
 
+def _variable_width(dtype: DataType) -> bool:
+    if isinstance(dtype, StructType):
+        return any(_variable_width(f.dataType) for f in dtype.fields)
+    return isinstance(dtype, (ArrayType, MapType, StringType, BinaryType))
+
+
 def state_join_side(
     state: DataFrame,
     upper_rows: int,
@@ -148,7 +162,18 @@ def state_join_side(
     on ``key_cols`` to ``arc_partitions`` so it co-partitions with the
     cache (state pays its single exchange; the graph still never moves).
     Join RESULTS are identical either way — only the physical strategy
-    changes."""
+    changes.
+
+    The row gate's byte arithmetic holds for scalar rows only, so a side
+    with a variable-width column (array, map, string or binary, at any
+    struct depth) raises ``TypeError``: such a side gates on bytes with
+    ``wide_rows_broadcastable`` instead."""
+    wide = [f.name for f in state.schema.fields if _variable_width(f.dataType)]
+    if wide:
+        raise TypeError(
+            f"state_join_side takes scalar sides; {wide} are variable-width "
+            "(gate them with wide_rows_broadcastable)"
+        )
     if upper_rows <= STATE_BROADCAST_ROWS:
         from pyspark.sql import functions as F
 

@@ -12,6 +12,8 @@ import importlib.util
 import sys
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parents[1]
 
 
@@ -91,27 +93,59 @@ def test_adjudicate_pair_memo_builder_resamples_cold(spark, monkeypatch):
     """The pair-memo BUILDER (dedup_minhash_lsh) must re-sample with the
     MinHash pair memo cleared: its baselines are cold-build numbers, so
     a warm re-sample would commit the ~0.03s dict lookup (r10 cand1).
-    Flagships keep their flow-memo clear; plain entries clear nothing."""
+    Flagships keep their graph/flow clear; plain entries clear nothing."""
     bench = _load_bench()
-    import pysparkflow.relational.registry as reg
 
-    calls: list[str] = []
-    monkeypatch.setattr(
-        reg, "clear_pair_memos", lambda: calls.append("pairs")
-    )
-    monkeypatch.setattr(reg, "clear_flow_memos", lambda: calls.append("flow"))
-    assert "dedup_minhash_lsh" in bench.PAIR_MEMO_BUILDERS
+    calls: list[tuple[str, ...]] = []
+    monkeypatch.setattr(bench, "clear_shared", lambda *names: calls.append(names))
+    assert bench.SPECS["dedup_minhash_lsh"].cold
     stub = lambda s, d: spark.range(1)  # noqa: E731
-    for name in ("dedup_minhash_lsh", "max_flow", "plain_entry"):
+    for name in ("dedup_minhash_lsh", "max_flow", "groupagg_pricing"):
         monkeypatch.setitem(bench.QUERIES, name, stub)
-    timings = {"dedup_minhash_lsh": 6.0, "max_flow": 20.0, "plain_entry": 6.0}
+    timings = {"dedup_minhash_lsh": 6.0, "max_flow": 20.0, "groupagg_pricing": 6.0}
     flags = [
         ("dedup_minhash_lsh", 3.7, 6.0),
         ("max_flow", 13.0, 20.0),
-        ("plain_entry", 2.0, 6.0),
+        ("groupagg_pricing", 2.0, 6.0),
     ]
     bench._adjudicate_flags(spark, "", timings, flags, run_query=None)
-    assert calls == ["pairs", "flow"]
+    assert calls == [("pairs",), ("graph", "flow")]
+
+
+# every sample of a cold builder pays its memos; warm readers and plain
+# entries clear nothing (a re-sample of max_flow_approx keeps the flow memo)
+SAMPLE_CLEARS = {
+    "max_flow": [("graph", "flow")],
+    "max_flow_approx": [("graph",)],
+    "dedup_minhash_lsh": [("pairs",)],
+    "min_cut": [],
+    "bfs_distances": [],
+    "groupagg_pricing": [],
+}
+
+
+@pytest.mark.parametrize("name", list(SAMPLE_CLEARS))
+def test_sample_clears_a_cold_entrys_memos(spark, monkeypatch, name):
+    bench = _load_bench()
+    calls: list[tuple[str, ...]] = []
+    monkeypatch.setattr(bench, "clear_shared", lambda *names: calls.append(names))
+    monkeypatch.setitem(bench.QUERIES, name, lambda s, d: spark.range(1))
+    assert bench._sample(spark, "", name) >= 0
+    assert calls == SAMPLE_CLEARS[name]
+
+
+def test_first_reader_of_every_memo_is_cold():
+    """In bench order, the first sample to read each session memo must be
+    a cold builder, which clears the memo first: a warm reader that ran
+    first would time the memo's build as its own (the r9 min_cut
+    ordering bug). Spark-free."""
+    bench = _load_bench()
+    first: dict[str, str] = {}
+    for name in bench.BENCH_QUERIES:
+        for memo in bench.SPECS[name].memos:
+            first.setdefault(memo, name)
+    assert set(first) == {"graph", "flow", "pairs"}
+    assert all(bench.SPECS[name].cold for name in first.values()), first
 
 
 def test_choose_candidate_medians_decide(tmp_path):

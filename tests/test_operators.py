@@ -90,7 +90,7 @@ def test_approx_quantiles_query_envelope(spark, sf_dir):
     # sketch-only registry entry (VERDICT r5 #1): each estimate must lie
     # inside the exact-percentile envelope at p ± 2*eps computed
     # INDEPENDENTLY here over the collected sorted values — the same
-    # band the tolerance oracle (TOLERANCE_ORACLES) asserts via DuckDB
+    # band the tolerance oracle (its registry QuerySpec) asserts via DuckDB
     from pysparkflow.relational.registry import QUERIES
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")

@@ -84,6 +84,29 @@ def test_state_join_side_copartitions_above_gate(spark):
     assert "hashpartitioning(u" in plan
 
 
+@pytest.mark.parametrize(
+    "side, wide",
+    [
+        ("u long, path array<long>", True),
+        ("u long, tag string", True),
+        ("u long, rank double", False),
+    ],
+    ids=["array", "string", "long_double"],
+)
+def test_state_join_side_takes_scalar_sides_only(spark, side, wide):
+    """The row gate's byte arithmetic holds for scalar rows only: a side
+    with a variable-width column raises, whatever its row bound, so it
+    can never reach the row gate; a (long, double) side passes."""
+    from pysparkflow.engine.partitioning import state_join_side
+
+    state = spark.createDataFrame([], side)
+    if wide:
+        with pytest.raises(TypeError, match="variable-width"):
+            state_join_side(state, 1, 4, "u")
+    else:
+        state_join_side(state, 1, 4, "u")
+
+
 def _job_ids(spark) -> set:
     """Ids of the jobs without a job group in the status store, once the
     listener bus has delivered every event so far."""
@@ -222,6 +245,36 @@ def test_loop_leaves_no_cache_after_release(spark, loop):
         df.collect()
     release_tracked()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_shared_memo_builds_once_and_clear_unpersists(spark):
+    """A session memo is built once per (application, name, sf_dir);
+    ``clear_shared`` drops only the named memos and unpersists the frames
+    they hold (a FlowGraph's edge table, a tuple's items), so the next
+    ``shared`` call builds again."""
+    from pysparkflow.engine.cache import clear_shared, shared
+    from pysparkflow.graph.graph import FlowGraph
+
+    builds = []
+
+    def build_graph():
+        builds.append(1)
+        edges = spark.range(3).selectExpr("id AS u", "id + 1 AS v", "1L AS cap")
+        return FlowGraph(spark, edges.persist())
+
+    g = shared(spark, "test_graph", "sf", build_graph)
+    assert shared(spark, "test_graph", "sf", build_graph) is g
+    assert len(builds) == 1
+    pairs = shared(spark, "test_pairs", "sf", lambda: (spark.range(2).persist(), 2))
+    assert g.edges.storageLevel.useMemory
+    clear_shared("test_graph")
+    assert not g.edges.storageLevel.useMemory
+    assert shared(spark, "test_pairs", "sf", lambda: None) is pairs
+    assert pairs[0].storageLevel.useMemory
+    assert shared(spark, "test_graph", "sf", build_graph) is not g
+    assert len(builds) == 2
+    clear_shared("test_graph", "test_pairs")
+    assert not pairs[0].storageLevel.useMemory
 
 
 def test_min_cut_never_broadcasts_past_the_gate(spark, monkeypatch):

@@ -7,7 +7,13 @@ import duckdb
 import pandas as pd
 import pytest
 
-from pysparkflow.relational.registry import ORACLE_SQL, QUERIES, TABLES
+from pysparkflow.relational.registry import (
+    ORACLE_SQL,
+    QUERIES,
+    SPECS,
+    TABLES,
+    QuerySpec,
+)
 
 # fast oracle-paired queries worth running in the unit suite
 SPOT_CHECK = [
@@ -53,8 +59,66 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def test_every_query_has_callable_and_oracle_keys():
-    assert set(ORACLE_SQL) <= set(QUERIES)
+    """Every entry has exactly one oracle: the equality oracles
+    (ORACLE_SQL) and the tolerance specs are disjoint and together cover
+    QUERIES; a scale-pinned spec is an equality oracle. The QuerySpec
+    constructor refuses both oracle kinds, neither, or a pinned
+    tolerance."""
+    tolerance = {k for k, s in SPECS.items() if s.tolerance is not None}
+    assert not set(ORACLE_SQL) & tolerance
+    assert set(ORACLE_SQL) | tolerance == set(QUERIES)
+    assert all(callable(fn) for fn in QUERIES.values())
+    pinned = {k for k, s in SPECS.items() if s.pinned_sf is not None}
+    assert pinned and pinned <= set(ORACLE_SQL)
     assert len(QUERIES) >= 30
+    build = QUERIES["groupagg_pricing"]
+    band = {"sql": "SELECT 1 AS k", "keys": ["k"]}
+    for bad in (
+        {"oracle": "SELECT 1", "tolerance": band},
+        {},
+        {"tolerance": band, "pinned_sf": "sf0.01"},
+    ):
+        with pytest.raises(ValueError):
+            QuerySpec("bad", build, **bad)
+
+
+def test_every_memo_read_is_declared():
+    """A spec's ``memos`` names exactly the session memos its build reads:
+    the ``shared(spark, "<memo>", ...)`` calls reachable from the build
+    through the registry's module-level functions, read off the source
+    (no Spark). bench.py clears and orders samples by the declarations,
+    so an undeclared read would time a memo lookup or a hidden build."""
+    import ast
+    import inspect
+
+    import pysparkflow.relational.registry as reg
+
+    tree = ast.parse(inspect.getsource(reg))
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+
+    def direct(fn):
+        memos, refs = set(), set()
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call) and getattr(node.func, "id", "") == "shared":
+                memos.add(node.args[1].value)
+            elif isinstance(node, ast.Name) and node.id in funcs:
+                refs.add(node.id)
+        return memos, refs
+
+    graph = {name: direct(fn) for name, fn in funcs.items()}
+
+    def reads(name, seen):
+        if name in seen:
+            return set()
+        seen.add(name)
+        memos, refs = graph[name]
+        return memos.union(*(reads(r, seen) for r in refs))
+
+    for name, spec in SPECS.items():
+        assert spec.build.__name__ in funcs, name
+        assert reads(spec.build.__name__, set()) == set(spec.memos), name
+    # the scan did find the registry's three memos
+    assert {m for s in SPECS.values() for m in s.memos} == {"graph", "flow", "pairs"}
 
 
 @pytest.mark.parametrize("name", SPOT_CHECK)

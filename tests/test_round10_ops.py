@@ -135,16 +135,12 @@ def test_source_overlap_sampled_configuration():
     """The graded 100 TB configuration (VERDICT r9 #4): the registry
     entry runs hash_frac=1/16 and is tolerance-gated (never a
     hash-window slot), with the exact-Jaccard band spec present."""
-    from pysparkflow.relational.registry import (
-        ORACLE_SQL,
-        QUERIES,
-        TOLERANCE_ORACLES,
-    )
+    from pysparkflow.relational.registry import ORACLE_SQL, QUERIES, SPECS
 
     assert "source_overlap_sampled" in QUERIES
-    assert "source_overlap_sampled" in TOLERANCE_ORACLES
+    spec = SPECS["source_overlap_sampled"].tolerance
+    assert spec is not None
     assert "source_overlap_sampled" not in ORACLE_SQL
-    spec = TOLERANCE_ORACLES["source_overlap_sampled"]
     assert spec["keys"] == ["source_a", "source_b"]
     assert "jaccard__lo" in spec["sql"] and "jaccard__hi" in spec["sql"]
 

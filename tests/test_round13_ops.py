@@ -358,11 +358,7 @@ def test_rotation_horizon_r13():
         rnd = int(f.stem.split("_r")[1])
         for k in json.loads(f.read_text()):
             last[k] = max(last.get(k, 0), rnd)
-    from pysparkflow.relational.registry import (
-        ORACLE_SQL,
-        QUERIES,
-        TOLERANCE_ORACLES,
-    )
+    from pysparkflow.relational.registry import ORACLE_SQL, QUERIES, SPECS
 
     window = set(list(QUERIES)[:50])
     for k in ORACLE_SQL:
@@ -375,7 +371,7 @@ def test_rotation_horizon_r13():
         for k, r in last.items()
         if k in QUERIES
         and k in ORACLE_SQL
-        and k not in TOLERANCE_ORACLES
+        and SPECS[k].tolerance is None
         and 13 - r > 3
     }
     assert not stale, f"entries beyond the 3-round horizon after r13: {stale}"

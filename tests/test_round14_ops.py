@@ -17,7 +17,7 @@ def test_driver_window_rotation_r14():
     pinned r10 spillovers, then the 29 alphabetically-first r11-cohort
     entries (no new entries — optimization round, feature-frozen); the
     fifteen remaining r11 entries spill to round 15."""
-    from pysparkflow.relational.registry import QUERIES, TOLERANCE_ORACLES
+    from pysparkflow.relational.registry import QUERIES, SPECS
 
     window = list(QUERIES)[:50]
     core = [
@@ -44,7 +44,7 @@ def test_driver_window_rotation_r14():
     r11_front = window[21:]
     assert len(r11_front) == 29
     assert r11_front == sorted(r11_front)
-    assert not set(TOLERANCE_ORACLES) & set(window)
+    assert all(SPECS[k].tolerance is None for k in window)
     assert len(window) == len(set(window)) == 50
 
 
@@ -60,11 +60,7 @@ def test_rotation_horizon_r14():
         rnd = int(f.stem.split("_r")[1])
         for k in json.loads(f.read_text()):
             last[k] = max(last.get(k, 0), rnd)
-    from pysparkflow.relational.registry import (
-        ORACLE_SQL,
-        QUERIES,
-        TOLERANCE_ORACLES,
-    )
+    from pysparkflow.relational.registry import ORACLE_SQL, QUERIES, SPECS
 
     window = set(list(QUERIES)[:50])
     for k in ORACLE_SQL:
@@ -77,7 +73,7 @@ def test_rotation_horizon_r14():
         for k, r in last.items()
         if k in QUERIES
         and k in ORACLE_SQL
-        and k not in TOLERANCE_ORACLES
+        and SPECS[k].tolerance is None
         and 14 - r > 3
     }
     assert not stale, f"entries beyond the 3-round horizon after r14: {stale}"

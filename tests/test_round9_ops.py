@@ -290,14 +290,14 @@ def test_approx_topk_guard_holds_on_all_graded_sfs(sf):
     """ADVICE r8: the rank-5/rank-6 exact-count margin that makes the
     tolerance key-set check sound is asserted against every graded
     dataset, not assumed."""
-    from pysparkflow.relational.registry import TOLERANCE_ORACLES
+    from pysparkflow.relational.registry import SPECS
 
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW events AS SELECT * FROM "
         f"'/root/testdata/{sf}/events.parquet'"
     )
-    gdf = con.sql(TOLERANCE_ORACLES["approx_topk"]["guard_sql"]).df()
+    gdf = con.sql(SPECS["approx_topk"].tolerance["guard_sql"]).df()
     assert bool(gdf["ok"].all()), gdf.to_string()
 
 
@@ -305,7 +305,7 @@ def test_approx_topk_guard_fails_on_flat_distribution():
     """Negative control: equal-count keys leave no rank margin, so the
     guard must refuse (ok=False) instead of letting the key-set check
     flake."""
-    from pysparkflow.relational.registry import TOLERANCE_ORACLES
+    from pysparkflow.relational.registry import SPECS
 
     con = duckdb.connect()
     # 8 buckets x 1000 rows each: rank5 == rank6 -> gap 0 < n/65
@@ -313,7 +313,7 @@ def test_approx_topk_guard_fails_on_flat_distribution():
         "CREATE VIEW events AS SELECT CAST(pow(2, 1 + i % 8) AS BIGINT) "
         "AS event_id FROM range(8000) t(i)"
     )
-    gdf = con.sql(TOLERANCE_ORACLES["approx_topk"]["guard_sql"]).df()
+    gdf = con.sql(SPECS["approx_topk"].tolerance["guard_sql"]).df()
     assert not bool(gdf["ok"].all())
 
 

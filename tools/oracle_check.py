@@ -1,8 +1,10 @@
 """Local stand-in for the driver's DuckDB-oracle correctness gate.
 
-Runs every QUERIES entry and, where ORACLE_SQL exists, the oracle on the
-same parquet via DuckDB; compares row count + column names + order-
-insensitive values (columns sorted by name, rows sorted by all columns).
+Runs every registry entry and its oracle on the same parquet via DuckDB.
+An equality oracle must match on row count + column names + order-
+insensitive values (columns sorted by name, rows sorted by all columns);
+one pinned to another scale is skipped. A tolerance oracle must bracket
+every estimate.
 
 Usage: python tools/oracle_check.py [sf_dir] [query ...]
 """
@@ -18,13 +20,7 @@ import pandas as pd
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from pysparkflow.relational.registry import (
-    ORACLE_SQL,
-    QUERIES,
-    SF_PINNED_ORACLES,
-    TABLES,
-    TOLERANCE_ORACLES,
-)
+from pysparkflow.relational.registry import SPECS, TABLES
 from pysparkflow.session import get_spark
 
 
@@ -57,31 +53,31 @@ def main() -> int:
         )
     failures = []
     results: dict[str, str] = {}
-    for name, fn in QUERIES.items():
+    for name, spec in SPECS.items():
         if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            sdf = spec.build(spark, sf_dir).toPandas()
         except Exception as e:
             failures.append(name)
             results[name] = f"FAIL: spark error {type(e).__name__}"
             print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
             continue
         el = time.time() - t0
-        if name in TOLERANCE_ORACLES:
+        tol = spec.tolerance
+        if tol is not None:
             # sketch entries (VERDICT r5 #1): the Spark plan returns only
             # estimates; DuckDB computes exact `<col>__lo`/`<col>__hi`
             # bounds and the comparator asserts containment per row
-            spec = TOLERANCE_ORACLES[name]
             try:
-                odf = con.sql(spec["sql"]).df()
+                odf = con.sql(tol["sql"]).df()
             except Exception as e:
                 failures.append(name)
                 results[name] = "FAIL: tolerance oracle error"
                 print(f"FAIL  {name}: tolerance oracle error: {str(e)[:300]}")
                 continue
-            keys = spec["keys"]
+            keys = tol["keys"]
             bound_cols = sorted(
                 c[: -len("__lo")] for c in odf.columns if c.endswith("__lo")
             )
@@ -110,8 +106,8 @@ def main() -> int:
             # checks are only sound under a data-distribution margin
             # (approx_topk's rank-5/rank-6 gap vs the MG bound); assert
             # it on the actual data instead of assuming it
-            if "guard_sql" in spec and not viol:
-                gdf = con.sql(spec["guard_sql"]).df()
+            if "guard_sql" in tol and not viol:
+                gdf = con.sql(tol["guard_sql"]).df()
                 if not bool(gdf["ok"].all()):
                     failures.append(name)
                     results[name] = "FAIL: tolerance guard violated"
@@ -135,11 +131,7 @@ def main() -> int:
                     f"({el:.1f}s)"
                 )
             continue
-        if name not in ORACLE_SQL:
-            results[name] = f"rows-only: {len(sdf)} rows"
-            print(f"ok*   {name}: rows={len(sdf)} ({el:.1f}s) [rows-only, no oracle]")
-            continue
-        pinned = SF_PINNED_ORACLES.get(name)
+        pinned = spec.pinned_sf
         if pinned and not sf_dir.rstrip("/").endswith(pinned):
             results[name] = f"rows-only here: {len(sdf)} rows (oracle pinned {pinned})"
             print(
@@ -148,7 +140,7 @@ def main() -> int:
             )
             continue
         try:
-            odf = con.sql(ORACLE_SQL[name]).df()
+            odf = con.sql(spec.oracle).df()
         except Exception as e:
             failures.append(name)
             results[name] = "FAIL: oracle error"
