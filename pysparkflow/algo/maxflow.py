@@ -19,7 +19,12 @@ bidirectional-path-growing (ff1..ff5, SURVEY.md §2.2) on DataFrames:
   ff1/Vertex.java:118-131; K=1 uses a hash-aggregate min_by — partial
   map-side combine — instead of a window sort);
 * meet-in-the-middle (D6/D7, ff1/Vertex.java:298-318) becomes an equi-join
-  of the newly extended frontier against the opposite side's path map;
+  of the newly extended frontier against the opposite side's path map,
+  cut and counted in the job that materializes the frontier — the
+  reference detects the meet inside the round's own reduce
+  (ff2/FordFulkerson.java:246-249, ff5/ReduceFF.java:192-198) — and
+  collected only when that count is positive. The restart meet of the
+  stored paths rides the job that counts their repair the same way;
 * the RMI ApServer's serial greedy acceptance (D8/D17,
   ff2/ApServer.java:26-48) becomes a driver-side Python loop over the
   collected candidates (engine/acceptor.py);
@@ -34,10 +39,14 @@ one "round" = one frontier extension):
 
     while True:
         arcs  = residual arcs (cached edges ⋈ broadcast flows, lazy)
-        grow S-frontier from s / T-frontier from t alternately (BFS, visited-pruned)
+        candidates = stored restart pairs, if their count is positive
+        grow S-frontier from s / T-frontier from t alternately (BFS, visited-pruned);
+            one job per round cuts and counts the frontier and its meet pairs,
+            candidates += meet rows (S-walk ++ T-walk + residual snapshots)
+            when the pair count is positive
         if frontiers exhaust with no meet: break         # proven optimal
-        candidates = meet rows (S-walk ++ T-walk + residual snapshots)
-        greedy-accept on driver; flows += deltas; loop
+        greedy-accept on driver; flows += deltas
+        one job cuts and counts repaired S/T paths and their restart pairs; loop
 
 Each phase accepts a *batch* of augmenting paths (all compatible meets), so
 the phase count scales with maxflow / batch-size, not maxflow — the same
@@ -305,6 +314,12 @@ def _extend(
     )
 
 
+def _collect_meet(pairs: DataFrame, limit: int) -> list:
+    """Up to ``limit`` rows of the meet-pair cut ``pairs``, in a
+    deterministic order; callers skip it when the pair count is 0."""
+    return pairs.orderBy("vertex", F.xxhash64("verts")).limit(limit).collect()
+
+
 def max_flow(
     graph: FlowGraph,
     sources: Iterable[int],
@@ -344,9 +359,9 @@ def max_flow(
     phase_cache: list[DataFrame] = []
 
     # stored-path state carried across acceptance epochs: repaired,
-    # materialized path tables per side plus their exact row counts, read
-    # off the jobs that materialized them
-    stored: tuple[DataFrame, DataFrame, int, int] | None = None
+    # materialized path tables per side and their restart-meet pairs, plus
+    # the three exact row counts, read off the job that materialized them
+    stored: tuple[DataFrame, DataFrame, int, int, DataFrame, int] | None = None
 
     def _path_row_bytes() -> int:
         """Static per-row byte bound for path-carrying tables (frontier /
@@ -362,12 +377,14 @@ def max_flow(
         cluster scale (VERDICT r13 #1)."""
         return 24 + 16 * (metrics.rounds + 1)
 
-    def _meet(near: DataFrame, far: DataFrame, n_far: int, limit: int) -> list:
-        """Collect up to ``limit`` path pairs meeting at a vertex, in a
-        deterministic order: ``near``'s rows joined on ``vertex`` with the
-        far side's path table (``o_verts``/``o_ress``). ``n_far`` bounds
-        the far side's rows; they carry path arrays, so the broadcast
-        gate is byte-aware — ``near`` is probed in place when it passes."""
+    def _meet_pairs(near: DataFrame, far: DataFrame, n_far: int) -> DataFrame:
+        """The path pairs meeting at a vertex, cut: ``near``'s rows joined
+        on ``vertex`` with the far side's path table (``o_verts``/
+        ``o_ress``). ``n_far`` bounds the far side's rows; they carry path
+        arrays, so the broadcast gate is byte-aware — ``near`` is probed
+        in place when it passes. The caller counts the cut in the job
+        that materializes ``near``'s own cut (engine/rounds.py
+        ``count_cuts``)."""
         o = far.select(
             F.col("vertex"),
             F.col("verts").alias("o_verts"),
@@ -375,12 +392,7 @@ def max_flow(
         )
         if partitioning.wide_rows_broadcastable(n_far, _path_row_bytes()):
             o = F.broadcast(o)
-        return (
-            near.join(o, "vertex")
-            .orderBy("vertex", F.xxhash64("verts"))
-            .limit(limit)
-            .collect()
-        )
+        return rounds.cut(near.join(o, "vertex"))
 
     _seg("init", _t_init)
     while True:
@@ -412,13 +424,15 @@ def max_flow(
             # of re-growing the whole BFS tree (the ff5 master
             # re-extension, ff5/ReduceFF.java:72-115)
             _t = _time.time()
-            paths_s, paths_t, n_s, n_t = stored
+            paths_s, paths_t, n_s, n_t, pairs, n_pairs = stored
             frontier_s, frontier_t = paths_s, paths_t
             # stored pairs meeting at a vertex were not all accepted last
-            # epoch — re-collect them before spending any rounds
-            candidates = [
-                (r, True) for r in _meet(paths_s, paths_t, n_t, cfg.max_candidates)
-            ]
+            # epoch — re-collect them before spending any rounds; the
+            # repair job counted them, so an empty meet costs no job
+            if n_pairs:
+                candidates = [
+                    (r, True) for r in _collect_meet(pairs, cfg.max_candidates)
+                ]
             _seg("restart_meet", _t)
         # every path is a frontier row at a phase's start; the rounds
         # below accumulate these visited-count upper bounds
@@ -437,9 +451,11 @@ def max_flow(
             extend_s = n_t == 0 or (n_s > 0 and n_s <= n_t)
             frontier = frontier_s if extend_s else frontier_t
             own = paths_s if extend_s else paths_t
-            # the meet collect below probes the blocks the counted job
-            # materialized
-            new_f, n_new = rounds.cut_count(
+            # the new frontier and its meet pairs with the opposite side's
+            # paths (bounded by that side's visited count) are cut, then
+            # materialized and counted by one job: a round whose meet is
+            # empty runs no meet job of its own
+            new_f = rounds.cut(
                 _extend(
                     frontier,
                     arcs,
@@ -454,13 +470,10 @@ def max_flow(
                     arc_partitions=edge_parts,
                 )
             )
-            # the opposite side's path table is bounded by its visited count
-            meets = _meet(
-                new_f,
-                paths_t if extend_s else paths_s,
-                v_t if extend_s else v_s,
-                cfg.max_candidates - len(candidates),
+            pairs = _meet_pairs(
+                new_f, paths_t if extend_s else paths_s, v_t if extend_s else v_s
             )
+            n_new, n_pairs = rounds.count_cuts(new_f, pairs)
             if extend_s:
                 frontier_s, n_s = new_f, n_new
             else:
@@ -475,8 +488,9 @@ def max_flow(
                 else:
                     paths_t = paths_t.unionAll(new_f).coalesce(n_shuffle)
                     v_t += n_new
-                if meets:
-                    candidates.extend((r, extend_s) for r in meets)
+            if n_pairs:
+                limit = cfg.max_candidates - len(candidates)
+                candidates.extend((r, extend_s) for r in _collect_meet(pairs, limit))
             if candidates:
                 rounds_after_meet += 1
             metrics.round_secs.append(_time.time() - _round_t0)
@@ -570,12 +584,16 @@ def max_flow(
             )
             rep_s = _repair_paths_join(paths_s, repair_df)
             rep_t = _repair_paths_join(paths_t, repair_df)
-        # one counted job per side; the exact post-repair counts are the
-        # next epoch's frontier sizes and visited bounds (coalesce bounds
-        # the join repair's partition count)
-        rep_s, c_s = rounds.cut_count(rep_s.coalesce(n_shuffle))
-        rep_t, c_t = rounds.cut_count(rep_t.coalesce(n_shuffle))
-        stored = (rep_s, rep_t, c_s, c_t)
+        # one counted job cuts both sides and the next epoch's restart
+        # meet: the exact post-repair counts are its frontier sizes and
+        # visited bounds (coalesce bounds the join repair's partition
+        # count), and repair only drops or shrinks paths, so the
+        # pre-repair bound v_t still bounds rep_t's rows
+        rep_s = rounds.cut(rep_s.coalesce(n_shuffle))
+        rep_t = rounds.cut(rep_t.coalesce(n_shuffle))
+        pairs = _meet_pairs(rep_s, rep_t, v_t)
+        c_s, c_t, n_pairs = rounds.count_cuts(rep_s, rep_t, pairs)
+        stored = (rep_s, rep_t, c_s, c_t, pairs, n_pairs)
         _seg("repair", _t)
 
         for df in phase_cache:

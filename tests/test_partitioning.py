@@ -168,6 +168,26 @@ def test_cut_count_is_exact_in_one_job(spark, shape):
             assert rdd.getNumPartitions() == partitions
 
 
+def test_count_cuts_is_exact_in_one_job(spark):
+    """``count_cuts`` materializes several cuts, one of which joins
+    another, and counts each exactly, for one job more than making the
+    cuts (max-flow counts a round's frontier and its meet pairs so)."""
+    from pysparkflow.engine import rounds
+
+    empty = rounds.cut(spark.createDataFrame([], "id long"))
+    shuffled = rounds.cut(spark.range(0, 1000, 1, 4).repartition(3, "id"))
+    joined = rounds.cut(shuffled.join(spark.range(0, 1500, 3), "id"))
+    before = _job_ids(spark)
+    counts = rounds.count_cuts(empty, shuffled, joined)
+    count_jobs = len(_job_ids(spark) - before)
+
+    assert counts == [0, 1000, len(range(0, 1000, 3))]
+    assert count_jobs == 1
+    for frame in (empty, shuffled, joined):
+        rdd = frame._jdf.queryExecution().analyzed().rdd()
+        assert rdd.isCheckpointedAndMaterialized()
+
+
 # a 4-cycle with a chord plus a pendant vertex: every loop has work to do
 LOOP_EDGES = [(1, 2, 3), (2, 3, 2), (3, 4, 2), (4, 1, 3), (1, 3, 1), (4, 5, 4)]
 # hostile inputs: no edges at all; self-loops on both ends of the path
@@ -277,6 +297,13 @@ def test_shared_memo_builds_once_and_clear_unpersists(spark):
     assert not pairs[0].storageLevel.useMemory
 
 
+def _executions(spark) -> list:
+    """The SQL executions the status store still keeps (only the newest;
+    select them by id)."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [execs.apply(i) for i in range(execs.size())]
+
+
 def test_min_cut_never_broadcasts_past_the_gate(spark, monkeypatch):
     """With Catalyst's own size-based broadcast off and the row gate shut,
     min_cut must plan no broadcast join at all — its flows table, BFS
@@ -288,27 +315,59 @@ def test_min_cut_never_broadcasts_past_the_gate(spark, monkeypatch):
 
     g, *_ = _loop_inputs(spark)
     flow = max_flow(g, [1], [5])
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def executions():
-        # the store keeps only the newest executions, so select by id
-        execs = store.executionsList()
-        return [execs.apply(i) for i in range(execs.size())]
-
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     monkeypatch.setattr(partitioning, "STATE_BROADCAST_ROWS", -1)
     try:
-        last = max((e.executionId() for e in executions()), default=-1)
+        last = max((e.executionId() for e in _executions(spark)), default=-1)
         res = min_cut(g, [1], [5], flow_result=flow)
         res.cut_edges.collect()
         res.s_side.collect()
         plans = [
-            e.physicalPlanDescription() for e in executions() if e.executionId() > last
+            e.physicalPlanDescription()
+            for e in _executions(spark)
+            if e.executionId() > last
         ]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert res.certified and res.value == flow.value
+    assert plans and any("Join" in p for p in plans)
+    assert not any("BroadcastHashJoin" in p for p in plans), [
+        p for p in plans if "BroadcastHashJoin" in p
+    ][0][:2000]
+
+
+def test_max_flow_never_broadcasts_past_the_gates(spark, monkeypatch):
+    """With Catalyst's own size-based broadcast off and both gates shut,
+    max_flow must plan no broadcast join at all — its frontier, visited,
+    meet-pair (round and restart) and flows sides all go through
+    engine/partitioning's gates — and still return the exact value.
+    K=2 keeps several paths per vertex, so meets span several rows."""
+    from pysparkflow.algo.maxflow import MaxFlowConfig, max_flow
+    from pysparkflow.engine import partitioning
+    from tests.test_maxflow import CLRS_EDGES, _build, _oracle
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    monkeypatch.setattr(partitioning, "STATE_BROADCAST_ROWS", -1)
+    monkeypatch.setattr(partitioning, "STATE_BROADCAST_BYTES", -1)
+    try:
+        last = max((e.executionId() for e in _executions(spark)), default=-1)
+        res = max_flow(
+            _build(spark, CLRS_EDGES),
+            [10],
+            [15],
+            MaxFlowConfig(excess_list_max=2, validate=True),
+        )
+        plans = [
+            e.physicalPlanDescription()
+            for e in _executions(spark)
+            if e.executionId() > last
+        ]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert res.value == _oracle(CLRS_EDGES, [10], [15])
+    assert res.metrics.phases > 1  # the restart meet ran
     assert plans and any("Join" in p for p in plans)
     assert not any("BroadcastHashJoin" in p for p in plans), [
         p for p in plans if "BroadcastHashJoin" in p
